@@ -33,7 +33,13 @@ Scale shape: every step is a join keyed on name or url against
 delta-bounded tables; the only corpus-sized inputs are the maintained
 tables themselves, read through name-/url-keyed semi-joins that prune to
 the affected slice. No broadcasts of corpus-sized sides, no windows over
-the full corpus.
+the full corpus. Three delta-bounded frames are materialized on the
+state-store path: the delta's mentions, the affected pages and the
+recompute slice (the kept mentions of every name an affected page
+carries). Each feeds several joins; left lazy, every one of those joins
+re-derives its side from the state scans and builds its own broadcast
+of it (the static plan of the `related` write held 105 broadcasts and
+38 file scans that way, against 14 and 1 with the frames materialized).
 """
 
 from __future__ import annotations
@@ -107,12 +113,15 @@ def apply_delta(mentions_old: DataFrame, stats_old: DataFrame,
     ``changed_pages`` carries new/updated page rows (url, content,
     source); a page deletion is a changed page with empty content.
 
-    Under ``return_touched`` the delta's mention table is eagerly
-    local-checkpointed: the touched-key collects plus the three table
-    writes would otherwise each re-run the extraction kernel on the
-    batch. The severed lineage is fine on this path because recovery is
+    Under ``return_touched`` three delta-bounded frames are eagerly
+    local-checkpointed: the delta's mention table, the affected pages and
+    the recompute slice. Each feeds several joins — the touched-key
+    collect, the three table writes, the edge and def-count branches of
+    the rollup — and each of those would otherwise re-run the extraction
+    kernel or re-scan the state, and build its own broadcast of the
+    result. The severed lineage is fine on this path because recovery is
     the state store's versioned commit (replayed batches are skipped by
-    id), not Spark recompute."""
+    id), not Spark recompute; without ``return_touched`` all stays lazy."""
     changed_urls = changed_pages.select("url").distinct()
     new_m = tm.mentions(changed_pages)
     if return_touched:
@@ -152,6 +161,8 @@ def apply_delta(mentions_old: DataFrame, stats_old: DataFrame,
         m_len.join(affected_pages, "url", "left_semi").select("name").distinct()
     )
     rel_m = _kept(m_len.join(relevant_names, "name", "left_semi"), stats_new)
+    if return_touched:
+        rel_m = rel_m.localCheckpoint(eager=True)
     defs_e = rel_m.filter(F.col("kind") == "DEF")
     refs_e = rel_m.filter(F.col("kind") == "REF")
     # keep only edges INCIDENT to an affected page before the rollup: a
@@ -169,12 +180,10 @@ def apply_delta(mentions_old: DataFrame, stats_old: DataFrame,
         .join(aff_src, "src_url", "left_anti")
     )
 
-    # def_count(page) must count ALL kept defs of an affected page — the
-    # url-keyed slice, not the name-keyed one (an affected page may also
-    # define unaffected names)
-    defs_aff = _kept(
-        m_len.join(affected_pages, "url", "left_semi"), stats_new
-    ).filter(F.col("kind") == "DEF")
+    # def_count(page) must count ALL kept defs of an affected page; each
+    # of its mentions carries a relevant name, so the slice holds them
+    defs_aff = rel_m.join(affected_pages, "url", "left_semi").filter(
+        F.col("kind") == "DEF")
 
     rel_slice = tm.related_pages(edges, defs_aff).join(
         affected_pages.withColumnRenamed("url", "page"), "page", "left_semi"

@@ -20,13 +20,18 @@ ONLY the buckets whose keys the delta touched (apply_delta's
 return_touched tells it exactly which urls/names/pages can differ), so
 both the compute AND the I/O are delta-bounded — an N-page micro-batch
 against a B-bucket store rewrites O(touched-keys / (corpus/B)) bucket
-directories, not the corpus. Touched buckets are rewritten WHOLE, so
+directories, not the corpus. On the compute side apply_delta
+materializes three delta-bounded frames (the delta's mentions, the
+affected pages, the recompute slice), so one job collects the touched
+bucket ids of all three tables and the `related` write reads the state
+once: the old `related` anti-joined with the affected pages, plus the
+rollup of the slice. Touched buckets are rewritten WHOLE, so
 per-commit bytes scale with bucket size: size ``n_buckets`` to a
 per-bucket byte target as the state grows (Iceberg's file-size
 targeting, measured in BENCH/state_io_r08.json — fixed B: commit bytes
-track state 1:1; constant bucket size: commit bytes stay flat). Atomicity is the manifest swap: new
-version dirs land unreferenced, then one os.replace of the manifest
-publishes them all; a killed commit leaves the manifest pointing at the
+track state 1:1; constant bucket size: commit bytes stay flat).
+Atomicity is the manifest swap: new version dirs land unreferenced,
+then one os.replace of the manifest publishes them all; a killed commit leaves the manifest pointing at the
 previous complete version of every bucket. A replayed micro-batch
 (foreachBatch is at-least-once) is skipped by its recorded batch id, so
 the state is effectively-exactly-once. This is file-level what an
@@ -43,6 +48,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -70,19 +76,18 @@ class RelatedStateStore:
           related/b=00003/v000000000007/     #   the live version
 
     ``n_buckets`` is fixed at store creation (persisted in the manifest;
-    a mismatched reopen raises rather than silently mis-bucketing)."""
+    a mismatched reopen raises rather than silently mis-bucketing).
+    ``None`` means the manifest's value, or 16 for a new store."""
 
-    def __init__(self, state_dir: str, n_buckets: int = 16):
+    def __init__(self, state_dir: str, n_buckets: int | None = None):
         self.state_dir = state_dir
-        self.n_buckets = n_buckets
         os.makedirs(state_dir, exist_ok=True)
         man = self.manifest()
-        if man is not None:
-            if man["n_buckets"] != n_buckets and n_buckets != 16:
-                raise ValueError(
-                    f"state dir has n_buckets={man['n_buckets']}, "
-                    f"caller asked for {n_buckets}")
-            self.n_buckets = man["n_buckets"]
+        found = man["n_buckets"] if man is not None else None
+        if n_buckets is not None and found not in (None, n_buckets):
+            raise ValueError(f"state dir has n_buckets={found}, "
+                             f"caller asked for {n_buckets}")
+        self.n_buckets = found or n_buckets or 16
 
     def _manifest_path(self) -> str:
         return os.path.join(self.state_dir, _MANIFEST)
@@ -208,12 +213,15 @@ def _empty_state(batch_df: DataFrame):
     return m0, s0, r0
 
 
-def _bucket_ids(df: DataFrame, col: str, n_buckets: int) -> set[int]:
-    """Distinct bucket ids of a delta-bounded key set (a collect of at
-    most n_buckets ints — never corpus-sized)."""
-    rows = df.select(
-        bucket_of(F.col(col), n_buckets).alias("b")).distinct().collect()
-    return {r["b"] for r in rows}
+def _bucket_ids(keys: dict[str, tuple[DataFrame, str]],
+                n_buckets: int) -> dict[str, set[int]]:
+    """table → distinct bucket ids of its delta-bounded key set, all
+    tables in one job (a collect of at most len(keys) × n_buckets rows —
+    never corpus-sized)."""
+    rows = reduce(DataFrame.unionByName, [
+        df.select(F.lit(t).alias("t"), bucket_of(df[c], n_buckets).alias("b"))
+        for t, (df, c) in keys.items()]).distinct().collect()
+    return {t: {r["b"] for r in rows if r["t"] == t} for t in keys}
 
 
 def apply_batch(spark: SparkSession, store: RelatedStateStore,
@@ -240,12 +248,11 @@ def apply_batch(spark: SparkSession, store: RelatedStateStore,
         return False
     m_new, s_new, r_new, affected_pages, touched = apply_delta(
         m_old, s_old, r_old, batch_df, symbol_len_limit, return_touched=True)
-    nb = store.n_buckets
-    touched_buckets = {
-        "mentions": _bucket_ids(touched["urls"], "url", nb),
-        "stats": _bucket_ids(touched["names"], "name", nb),
-        "related": _bucket_ids(affected_pages, "url", nb),
-    }
+    touched_buckets = _bucket_ids({
+        "mentions": (touched["urls"], "url"),
+        "stats": (touched["names"], "name"),
+        "related": (affected_pages, "url"),
+    }, store.n_buckets)
     store.commit(batch_id, m_new, s_new, r_new, touched=touched_buckets)
     return True
 
@@ -254,7 +261,7 @@ def maintain_related_stream(spark: SparkSession, pages_dir: str, schema: str,
                             state_dir: str, checkpoint_dir: str,
                             max_files_per_trigger: int = 1,
                             symbol_len_limit: int = 3,
-                            n_buckets: int = 16):
+                            n_buckets: int | None = None):
     """readStream over a landing dir of page batches → per-micro-batch
     splice into a RelatedStateStore. Returns (query, store); the query
     runs with availableNow (drain-then-stop — swap for a processing-time

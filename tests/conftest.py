@@ -13,11 +13,23 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 SF_DIR_ORACLE = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
 
 
+def _driver_mem() -> str:
+    """Half of physical memory, never above 16g. One heap serves driver
+    and executors in local mode and the full suite runs ~2500 stages
+    through it, but the Python workers and the OS need the other half: a
+    heap as large as RAM gets the JVM killed by the kernel mid-suite."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(line.split()[1]) for line in f
+                      if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return "16g"
+    return f"{min(16 * 1024, kb // 2048)}m"
+
+
 @pytest.fixture(scope="session")
 def spark():
-    # one heap serves driver+executors in local mode and the full suite
-    # runs ~2500 stages through it — give it headroom beyond the 8g default
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "16g")
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", _driver_mem())
     s = get_spark(app_name="gossiphs_spark_tests", cores=8, shuffle_partitions=8)
     yield s
 

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from gossiphs_spark.datagen import PAGES_SCHEMA, pages_df
@@ -267,6 +268,25 @@ def test_maintain_commit_rewrites_only_touched_buckets(spark, tmp_path):
     want_m = {(r["url"], r["name"], r["kind"]) for r in tm.mentions(
         spark.createDataFrame(final_corpus, MAINT_SCHEMA)).collect()}
     assert {(r["url"], r["name"], r["kind"]) for r in m.collect()} == want_m
+
+
+def test_state_store_reopen_checks_n_buckets(spark, tmp_path):
+    """n_buckets is fixed at store creation: a reopen that names none
+    adopts the manifest's value, and any explicit mismatch raises — an
+    explicit 16 included, which must not pass for the default."""
+    from gossiphs_spark.streaming.maintain import RelatedStateStore
+
+    state = str(tmp_path / "state")
+    store = RelatedStateStore(state, n_buckets=8)
+    empty = spark.createDataFrame([], "k string")
+    store.commit(0, empty, empty, empty,
+                 touched={t: set() for t in ("mentions", "stats", "related")})
+    assert RelatedStateStore(state).n_buckets == 8
+    assert RelatedStateStore(state, n_buckets=8).n_buckets == 8
+    for nb in (16, 4):
+        with pytest.raises(ValueError, match="n_buckets=8"):
+            RelatedStateStore(state, n_buckets=nb)
+    assert RelatedStateStore(str(tmp_path / "fresh")).n_buckets == 16
 
 
 def test_maintain_replayed_batch_is_skipped(spark, tmp_path):
