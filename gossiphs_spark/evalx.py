@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from gossiphs_spark.session import query_scope
+
 BUCKETS = [(0, 10), (10, 50), (50, 100), (100, 500), (500, 1 << 62)]
 
 
@@ -86,102 +88,97 @@ def cutoff_search(
        precision, src_coverage) — one row per target.
     """
     spark = labeled_links.sparkSession
+    with query_scope(spark) as scope:
+        links = scope.cache(labeled_links.select("src", "dst", "score", "label"))
+        full = links.agg(
+            F.count("*").alias("n"), F.countDistinct("src").alias("n_src")
+        ).collect()[0]
+        total_links, n_src_total = full["n"], full["n_src"]
+        if min_kept_links is None:
+            min_kept_links = max(50, int(total_links * 0.01))
 
-    links = labeled_links.select("src", "dst", "score", "label").cache()
-    full = links.agg(
-        F.count("*").alias("n"), F.countDistinct("src").alias("n_src")
-    ).collect()[0]
-    total_links, n_src_total = full["n"], full["n_src"]
-    if min_kept_links is None:
-        min_kept_links = max(50, int(total_links * 0.01))
+        items = scope.cache(
+            links.orderBy(F.desc("score"), F.asc("src"), F.asc("dst"))
+            .limit(max_candidates)
+        )
 
-    items = (
-        links.orderBy(F.desc("score"), F.asc("src"), F.asc("dst"))
-        .limit(max_candidates)
-        .cache()
-    )
+        # quantile cutoffs over the sample's distinct scores (idx = int((n-1)·q))
+        scores = (
+            items.select("score").distinct()
+            .withColumn("i", F.row_number().over(Window.orderBy("score")) - 1)
+            .withColumn("n", F.count("*").over(Window.partitionBy()))
+        )
+        qs = spark.createDataFrame([(float(q),) for q in quantiles], "q double")
+        quantile_cuts = (
+            scores.crossJoin(F.broadcast(qs))
+            .filter(F.col("i") == F.floor((F.col("n") - 1) * F.col("q")).cast("int"))
+            .select(F.col("score").alias("cutoff"))
+        )
+        cutoffs = (
+            quantile_cuts.unionByName(
+                spark.createDataFrame([(0,)], "cutoff long").select(
+                    F.col("cutoff").cast(quantile_cuts.schema["cutoff"].dataType)
+                )
+            )
+            .distinct()
+        )
 
-    # quantile cutoffs over the sample's distinct scores (idx = int((n-1)·q))
-    scores = (
-        items.select("score").distinct()
-        .withColumn("i", F.row_number().over(Window.orderBy("score")) - 1)
-        .withColumn("n", F.count("*").over(Window.partitionBy()))
-    )
-    qs = spark.createDataFrame([(float(q),) for q in quantiles], "q double")
-    quantile_cuts = (
-        scores.crossJoin(F.broadcast(qs))
-        .filter(F.col("i") == F.floor((F.col("n") - 1) * F.col("q")).cast("int"))
-        .select(F.col("score").alias("cutoff"))
-    )
-    cutoffs = (
-        quantile_cuts.unionByName(
-            spark.createDataFrame([(0,)], "cutoff long").select(
-                F.col("cutoff").cast(quantile_cuts.schema["cutoff"].dataType)
+        stats = (
+            items.crossJoin(F.broadcast(cutoffs))
+            .filter(F.col("score") >= F.col("cutoff"))
+            .groupBy("cutoff")
+            .agg(
+                F.count("*").alias("total"),
+                F.sum((F.col("label") == "confirmed").cast("long")).alias("confirmed"),
+                F.sum((F.col("label") == "true_bonus").cast("long")).alias("true_bonus"),
+                F.sum((F.col("label") == "phantom").cast("long")).alias("phantom"),
+                F.countDistinct("src").alias("n_src"),
+            )
+            .withColumn("hr", F.col("phantom") / F.col("total"))
+            .withColumn("precision", (F.col("confirmed") + F.col("true_bonus")) / F.col("total"))
+            .withColumn("src_coverage", F.col("n_src") / F.lit(float(n_src_total)))
+        )
+
+        # the reported cutoff keeps the INPUT score dtype: a long cast on a
+        # double-scored link set would silently truncate the value the search
+        # actually selected (integral inputs cast long for oracle parity)
+        from pyspark.sql.types import IntegralType
+
+        integral_scores = isinstance(
+            labeled_links.schema["score"].dataType, IntegralType
+        )
+        cutoff_out = (
+            F.col("cutoff").cast("long") if integral_scores else F.col("cutoff")
+        )
+
+        tg = spark.createDataFrame([(float(t),) for t in targets], "target double")
+        per_target = stats.crossJoin(F.broadcast(tg)).withColumns({
+            "meets": (
+                (F.col("hr") <= F.col("target"))
+                & (F.col("total") >= F.lit(min_kept_links))
+                & (F.col("src_coverage") >= F.lit(float(min_src_coverage)))
+            ),
+            "utility": F.col("precision") - F.col("hr") + 0.15 * F.col("src_coverage"),
+        })
+        w = Window.partitionBy("target").orderBy(
+            F.desc("meets"),
+            # qualifying: lowest cutoff; fallback: max utility, lowest cutoff ties
+            F.when(F.col("meets"), F.lit(0.0)).otherwise(-F.col("utility")),
+            F.asc("cutoff"),
+        )
+        return scope.result(
+            per_target.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1)
+            .select(
+                "target",
+                cutoff_out.alias("cutoff"),
+                F.col("total").cast("long").alias("total"),
+                "confirmed", "true_bonus", "phantom",
+                F.round("hr", 6).alias("hr"),
+                F.round("precision", 6).alias("precision"),
+                F.round("src_coverage", 6).alias("src_coverage"),
             )
         )
-        .distinct()
-    )
-
-    stats = (
-        items.crossJoin(F.broadcast(cutoffs))
-        .filter(F.col("score") >= F.col("cutoff"))
-        .groupBy("cutoff")
-        .agg(
-            F.count("*").alias("total"),
-            F.sum((F.col("label") == "confirmed").cast("long")).alias("confirmed"),
-            F.sum((F.col("label") == "true_bonus").cast("long")).alias("true_bonus"),
-            F.sum((F.col("label") == "phantom").cast("long")).alias("phantom"),
-            F.countDistinct("src").alias("n_src"),
-        )
-        .withColumn("hr", F.col("phantom") / F.col("total"))
-        .withColumn("precision", (F.col("confirmed") + F.col("true_bonus")) / F.col("total"))
-        .withColumn("src_coverage", F.col("n_src") / F.lit(float(n_src_total)))
-    )
-
-    # the reported cutoff keeps the INPUT score dtype: a long cast on a
-    # double-scored link set would silently truncate the value the search
-    # actually selected (integral inputs cast long for oracle parity)
-    from pyspark.sql.types import IntegralType
-
-    integral_scores = isinstance(
-        labeled_links.schema["score"].dataType, IntegralType
-    )
-    cutoff_out = (
-        F.col("cutoff").cast("long") if integral_scores else F.col("cutoff")
-    )
-
-    tg = spark.createDataFrame([(float(t),) for t in targets], "target double")
-    per_target = stats.crossJoin(F.broadcast(tg)).withColumns({
-        "meets": (
-            (F.col("hr") <= F.col("target"))
-            & (F.col("total") >= F.lit(min_kept_links))
-            & (F.col("src_coverage") >= F.lit(float(min_src_coverage)))
-        ),
-        "utility": F.col("precision") - F.col("hr") + 0.15 * F.col("src_coverage"),
-    })
-    w = Window.partitionBy("target").orderBy(
-        F.desc("meets"),
-        # qualifying: lowest cutoff; fallback: max utility, lowest cutoff ties
-        F.when(F.col("meets"), F.lit(0.0)).otherwise(-F.col("utility")),
-        F.asc("cutoff"),
-    )
-    result = (
-        per_target.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select(
-            "target",
-            cutoff_out.alias("cutoff"),
-            F.col("total").cast("long").alias("total"),
-            "confirmed", "true_bonus", "phantom",
-            F.round("hr", 6).alias("hr"),
-            F.round("precision", 6).alias("precision"),
-            F.round("src_coverage", 6).alias("src_coverage"),
-        )
-    )
-    rows, schema = result.collect(), result.schema
-    items.unpersist()
-    links.unpersist()
-    return spark.createDataFrame(rows, schema)
 
 
 def bucketed_quality(links: DataFrame, oracle: DataFrame,

@@ -37,6 +37,7 @@ from gossiphs_spark.operators.ranking import attach_cutoffs, filter_related
 from gossiphs_spark.operators.scoring import entropy_zscore_adjust
 from gossiphs_spark.operators.graphops import salted_sum
 from gossiphs_spark.operators.textmode import damp_hubs, hub_stoplist
+from gossiphs_spark.session import query_scope
 
 
 @dataclass
@@ -59,9 +60,10 @@ class GraphTables:
     #                         done to bound disk (one corpus-scale dir per
     #                         build otherwise).
     cached: tuple = ()      # the intermediates THIS build cached, so a
-    #                         caller can release exactly them (not
+    #                         caller (or its query scope's ``own``) can
+    #                         release exactly them — not
     #                         catalog.clearCache(), which evicts every
-    #                         other query's warmed caches session-wide)
+    #                         other query's warmed caches session-wide
 
     def release(self) -> None:
         """Drop this build's scratch stage (the tables become unreadable)."""
@@ -232,6 +234,17 @@ def build_graph(
     evidence: DataFrame,
     cfg: PipelineConfig = PipelineConfig(),
 ) -> GraphTables:
+    """The scored build. The returned tables own its caches and scratch
+    stage (:meth:`GraphTables.release_caches` / :meth:`GraphTables.release`);
+    if the build raises, it releases them itself, shuts the evidence-fill
+    thread down, and re-raises."""
+    with query_scope(spark) as scope:
+        g = _build_graph(scope, spark, pages, evidence, cfg)
+        scope.pop_all()  # built: ownership passes to the caller
+    return g
+
+
+def _build_graph(scope, spark, pages, evidence, cfg) -> GraphTables:
     # ---- U1 + hygiene -----------------------------------------------------
     if cfg.exclude_url_regex:
         pages = pages.filter(~F.regexp_like("url", F.lit(cfg.exclude_url_regex)))  # F2
@@ -240,15 +253,16 @@ def build_graph(
     # The extraction UDF feeds every downstream branch (defs/refs/imports/
     # idf/triples) — cache it or Arrow extraction re-executes per branch.
     # The reference extracts exactly once (graph.rs:504-508); so do we.
-    mentions = mentions.cache()
+    mentions = scope.cache(mentions)
     # The evidence dedup scan is independent of the mention/stats chain
     # until the size-limit filter (which needs n_pages), so its cache fill
     # runs CONCURRENTLY with the stats job below (guide §2.6 — overlap
     # independent jobs so one job's tail back-fills the other's executors).
     from concurrent.futures import ThreadPoolExecutor
 
-    ev_base = evidence.select("url", "evidence_id", "ts").distinct().cache()
+    ev_base = scope.cache(evidence.select("url", "evidence_id", "ts").distinct())
     pool = ThreadPoolExecutor(max_workers=1)
+    scope.callback(pool.shutdown)
     ev_fill = pool.submit(ev_base.count)
     # ONE stats pass over the cached mentions feeds every scalar the plan
     # needs: n_pages (was a second full scan of `pages` — at 100 TB that is
@@ -291,7 +305,7 @@ def build_graph(
 
         fm_path = cfg.stage_scratch_uri.rstrip("/") + f"/fm_{uuid.uuid4().hex}"
         fm.write.mode("overwrite").parquet(fm_path)
-        fm = spark.read.parquet(fm_path).cache()
+        fm = scope.cache(spark.read.parquet(fm_path))
     elif cfg.stage_materialize and master.startswith("local"):
         import atexit
         import os
@@ -305,9 +319,10 @@ def build_graph(
         # production the stage table is Iceberg via the TripleSink seam
         # and snapshot expiry owns its lifecycle.
         atexit.register(shutil.rmtree, scratch, ignore_errors=True)
+        scope.callback(shutil.rmtree, scratch, ignore_errors=True)
         fm_path = os.path.join(scratch, "fm")
         fm.write.mode("overwrite").parquet(fm_path)
-        fm = spark.read.parquet(fm_path).cache()
+        fm = scope.cache(spark.read.parquet(fm_path))
     else:
         if cfg.stage_materialize:
             # non-local master with no shared scratch URI: a driver-local
@@ -319,9 +334,9 @@ def build_graph(
                 "stage_materialize skipped: spark.master is non-local and "
                 "cfg.stage_scratch_uri is unset; set a shared scratch URI "
                 "to materialize the stage on a cluster",
-                stacklevel=2,
+                stacklevel=3,
             )
-        fm = fm.cache()
+        fm = scope.cache(fm)
     defs = fm.filter(F.col("kind") == "DEF")
     refs = fm.filter(F.col("kind") == "REF")
     imports = fm.filter(F.col("kind") == "IMPORT")
@@ -337,12 +352,12 @@ def build_graph(
     # volume) just like the name dictionaries — same gate (bcast_ok is the
     # one corpus-scale switch: past the threshold, every corpus-growing
     # dictionary stays a shuffle join)
-    ev = ev_base.join(
+    ev = scope.cache(ev_base.join(
         _maybe_broadcast(
             sizes.filter(F.col("n_urls") < limit).select("evidence_id"), bcast_ok
         ),
         "evidence_id", "left_semi",
-    ).cache()  # consumed by anchor, cardinality, pair-intersection, gate
+    ))  # consumed by anchor, cardinality, pair-intersection, gate
     anchor_row = ev.agg(F.max("ts").alias("mx")).collect()[0]
     ev_base.unpersist()  # the filtered ev cache is materialized now
     anchor = anchor_row["mx"]
@@ -353,7 +368,7 @@ def build_graph(
         decay_w = F.pow(F.lit(2.0), -age_days / F.lit(cfg.half_life_days))
     else:
         decay_w = F.lit(1.0)
-    evd = ev.select("url", "evidence_id", decay_w.alias("w")).cache()
+    evd = scope.cache(ev.select("url", "evidence_id", decay_w.alias("w")))
     card = evd.groupBy("url").agg(F.sum("w").alias("card"))
 
     # ---- per-file gate (ref graph.rs:608-618) ------------------------------
@@ -377,7 +392,7 @@ def build_graph(
     # scoring joins — uncached, the candidate join + dedup window executes
     # twice (visible as two identical 5-col window exchanges in the plan)
     cands = _candidates(cand_defs, cand_refs, signal_pages, bcast_ok)
-    cands = _physical_evidence(cands, imports).cache()
+    cands = scope.cache(_physical_evidence(cands, imports))
 
     # ---- co-occurrence restricted to candidate pairs (J5/A5) -------------
     pairs = cands.select("ref_url", "def_url").distinct()
@@ -448,13 +463,13 @@ def build_graph(
     w = Window.partitionBy(*grp).orderBy(
         F.desc("bucket"), F.asc("def_url"), F.asc("def_byte")
     )
-    kept = (
+    kept = scope.cache(
         attach_cutoffs(scored, grp, "bucket", ["def_url", "def_byte"], cfg.def_limit)
         .withColumn("rn", F.row_number().over(w))
         .filter((F.col("bucket") >= F.col("cutoff")) | (F.col("rn") == 1))
         .filter(F.col("rn") <= hard_cap)
         .drop("rn", "cutoff")
-    ).cache()  # consumed by fallback anti-join, edges, incoming, outgoing
+    )  # consumed by fallback anti-join, edges, incoming, outgoing
 
     # ---- J7 unique-def fallback (weight-0 links, ref graph.rs:801-819) ---
     linked_defs = kept.select("def_url", "def_name").distinct()
@@ -479,9 +494,9 @@ def build_graph(
     # ---- A8: page-level edge accumulation (salted two-phase) -------------
     # cache: consumed by page_edges, incoming AND outgoing — without it the
     # kept-union-fallback chain re-executes once per consumer
-    sym_edges = kept.select(
+    sym_edges = scope.cache(kept.select(
         "ref_url", "ref_name", "occ", "def_url", "def_name", "bucket"
-    ).unionByName(fallback).cache()
+    ).unionByName(fallback))
     page_edges = salted_sum(
         sym_edges.withColumn("w_total", F.col("bucket") * F.col("occ")),
         ["ref_url", "def_url"], "w_total", "ref_name",
@@ -591,7 +606,7 @@ def canonicalize_triples(triples: DataFrame, jaccard_min: float = 0.6,
     outlive the caller's final action on the returned plan, so they
     cannot be released inside; pass ``cached_out`` (a list the two
     DataFrames are appended to) and unpersist them after your action —
-    the contract queries do this via their detach step."""
+    the contract queries hand it to their query scope (``q.hold``)."""
     from gossiphs_spark.operators.canonicalize import canonical_entities
 
     triples = triples.cache()

@@ -25,6 +25,7 @@ from gossiphs_spark.operators import textmode as tm
 from gossiphs_spark.operators import scoring as sc
 from gossiphs_spark.operators.ranking import group_cutoffs
 from gossiphs_spark.operators.graphops import dense_ids, snapshot_diff
+from gossiphs_spark.session import query_scope
 from gossiphs_spark.sources.testdata import doc_pages, evidence, load_table
 
 N_DOCS_CACHE: dict[str, int] = {}
@@ -44,13 +45,7 @@ def _mentions(spark, sf_dir):
     return tm.mentions(doc_pages(spark, sf_dir))
 
 
-# Explain-capture hook: scripts/capture_plans.py sets this so _finish
-# returns the raw (un-checkpointed) plan — the judge-facing plan files
-# must show the real computation shape, not "Scan ExistingRDD".
-_EXPLAIN_CAPTURE = False
-
-
-def _cached_fm(spark, sf_dir):
+def _cached_fm(q, spark, sf_dir):
     """mentions → filter_pointless with both levels cached (guide §5).
 
     Every composed text-mode query references the fm tree from several
@@ -60,26 +55,10 @@ def _cached_fm(spark, sf_dir):
     and the posexplode+window extraction re-executes per branch (measured
     ~10 copies / 50-118 Exchange nodes per query plan at r9 start). One
     cached pass each for mentions and fm collapses that to a single
-    derivation. Callers MUST release via :func:`_finish` (or unpersist
-    directly) so no cache outlives its query — bench isolation."""
-    m = _mentions(spark, sf_dir).cache()
-    fm = tm.filter_pointless(m, 3).cache()
-    return m, fm
-
-
-def _finish(df, *caches):
-    """Eagerly materialize a query result INSIDE its timed region, then
-    release the caches it consumed. The caller's action then reads the
-    materialized partitions; nothing re-derives the released chain, and
-    no cache leaks across queries sharing the bench/driver session.
-    Results here are probe-bounded (small); corpus-scale outputs go
-    through the TripleSink/scratch seam instead."""
-    if _EXPLAIN_CAPTURE:
-        return df
-    out = df.localCheckpoint(eager=True)
-    for c in caches:
-        c.unpersist()
-    return out
+    derivation. Both caches belong to the query scope ``q`` and are
+    released when it closes, so none outlives its query — bench
+    isolation; the query returns ``q.result(...)`` from inside it."""
+    return q.cache(tm.filter_pointless(q.cache(_mentions(spark, sf_dir)), 3))
 
 
 def _filtered(spark, sf_dir):
@@ -319,26 +298,26 @@ def j2_link_basename(spark, sf_dir):
 
 
 def a8_edges(spark, sf_dir):
-    m, fm = _cached_fm(spark, sf_dir)
-    e = tm.edges(
-        fm.filter(F.col("kind") == "DEF"), fm.filter(F.col("kind") == "REF")
-    )
-    out = (
-        e.filter(_doc_num(F.col("src_url")) < 10)
-        .groupBy("src_url", "dst_url")
-        .agg(F.sum("weight").cast("long").alias("weight"))
-    )
-    return _finish(out, m, fm)
+    with query_scope(spark) as q:
+        fm = _cached_fm(q, spark, sf_dir)
+        e = tm.edges(
+            fm.filter(F.col("kind") == "DEF"), fm.filter(F.col("kind") == "REF")
+        )
+        return q.result(
+            e.filter(_doc_num(F.col("src_url")) < 10)
+            .groupBy("src_url", "dst_url")
+            .agg(F.sum("weight").cast("long").alias("weight"))
+        )
 
 
 def a9_related_pages(spark, sf_dir):
-    m, fm = _cached_fm(spark, sf_dir)
-    defs = fm.filter(F.col("kind") == "DEF")
-    rel = tm.related_pages(tm.edges(defs, fm.filter(F.col("kind") == "REF")), defs)
-    out = rel.filter(_doc_num(F.col("page")) < 10).select(
-        "page", "other", F.col("score").cast("long").alias("score")
-    )
-    return _finish(out, m, fm)
+    with query_scope(spark) as q:
+        fm = _cached_fm(q, spark, sf_dir)
+        defs = fm.filter(F.col("kind") == "DEF")
+        rel = tm.related_pages(tm.edges(defs, fm.filter(F.col("kind") == "REF")), defs)
+        return q.result(rel.filter(_doc_num(F.col("page")) < 10).select(
+            "page", "other", F.col("score").cast("long").alias("score")
+        ))
 
 
 def a9_related_with_symbols(spark, sf_dir):
@@ -369,17 +348,16 @@ def a9_related_with_symbols(spark, sf_dir):
 
 
 def w8_topk_neighbors(spark, sf_dir):
-    m, fm = _cached_fm(spark, sf_dir)
-    defs = fm.filter(F.col("kind") == "DEF")
-    rel = tm.related_pages(
-        tm.edges(defs, fm.filter(F.col("kind") == "REF")), defs
-    ).filter(_doc_num(F.col("page")) < 20)
-    out = tm.topk_neighbors(rel, 5)
-    out = out.select(
-        "page", "other", F.col("score").cast("long").alias("score"),
-        F.col("rnk").cast("long").alias("rnk"),
-    )
-    return _finish(out, m, fm)
+    with query_scope(spark) as q:
+        fm = _cached_fm(q, spark, sf_dir)
+        defs = fm.filter(F.col("kind") == "DEF")
+        rel = tm.related_pages(
+            tm.edges(defs, fm.filter(F.col("kind") == "REF")), defs
+        ).filter(_doc_num(F.col("page")) < 20)
+        return q.result(tm.topk_neighbors(rel, 5).select(
+            "page", "other", F.col("score").cast("long").alias("score"),
+            F.col("rnk").cast("long").alias("rnk"),
+        ))
 
 
 def a9_symbol_neighbors(spark, sf_dir):
@@ -389,19 +367,19 @@ def a9_symbol_neighbors(spark, sf_dir):
     pages) and REF-direction (referencing page → defining pages) neighbor
     row. Anchor pages probe < 5 (the text-mode vocabulary is ~30 dense
     words, so an unprobed symbol slice is ~10^5 detail rows at sf0.01)."""
-    m, fm = _cached_fm(spark, sf_dir)
-    defs = fm.filter(F.col("kind") == "DEF")
-    refs = fm.filter(F.col("kind") == "REF")
-    e = tm.edges(defs, refs)
-    # probe names via the per-name aggregate (tm.edge_names) instead of
-    # key-projecting the materialized edge join (~10^8 rows at sf0.1)
-    probe = tm.edge_names(defs, refs).orderBy("name").limit(3)
-    out = tm.symbol_neighbors_many(e, probe)
-    out = out.filter(_doc_num(F.col("anchor_url")) < 5).select(
-        "kind", "anchor_url", "neighbor_url", "name",
-        F.col("weight").cast("long").alias("weight"),
-    )
-    return _finish(out, m, fm)
+    with query_scope(spark) as q:
+        fm = _cached_fm(q, spark, sf_dir)
+        defs = fm.filter(F.col("kind") == "DEF")
+        refs = fm.filter(F.col("kind") == "REF")
+        e = tm.edges(defs, refs)
+        # probe names via the per-name aggregate (tm.edge_names) instead of
+        # key-projecting the materialized edge join (~10^8 rows at sf0.1)
+        probe = tm.edge_names(defs, refs).orderBy("name").limit(3)
+        out = tm.symbol_neighbors_many(e, probe)
+        return q.result(out.filter(_doc_num(F.col("anchor_url")) < 5).select(
+            "kind", "anchor_url", "neighbor_url", "name",
+            F.col("weight").cast("long").alias("weight"),
+        ))
 
 
 def eval_cutoff_search(spark, sf_dir):
@@ -419,11 +397,6 @@ def eval_cutoff_search(spark, sf_dir):
     exercised, not vacuous, in the oracle comparison."""
     from gossiphs_spark.evalx import cutoff_search
 
-    m, fm = _cached_fm(spark, sf_dir)
-    defs = fm.filter(F.col("kind") == "DEF")
-    rel = tm.related_pages(
-        tm.edges(defs, fm.filter(F.col("kind") == "REF")), defs
-    ).filter(_doc_num(F.col("page")) < 400)
     pn = _doc_num(F.col("page"))
     on = _doc_num(F.col("other"))
     r = (pn * 7 + on * 13) % 10
@@ -432,14 +405,17 @@ def eval_cutoff_search(spark, sf_dir):
         .when(r < 7, F.lit("true_bonus"))
         .otherwise(F.lit("phantom"))
     )
-    links = rel.select(
-        F.col("page").alias("src"), F.col("other").alias("dst"),
-        "score", label.alias("label"),
-    )
-    out = cutoff_search(links)  # eager: detaches before returning
-    m.unpersist()
-    fm.unpersist()
-    return out
+    with query_scope(spark) as q:
+        fm = _cached_fm(q, spark, sf_dir)
+        defs = fm.filter(F.col("kind") == "DEF")
+        rel = tm.related_pages(
+            tm.edges(defs, fm.filter(F.col("kind") == "REF")), defs
+        ).filter(_doc_num(F.col("page")) < 400)
+        links = rel.select(
+            F.col("page").alias("src"), F.col("other").alias("dst"),
+            "score", label.alias("label"),
+        )
+        return cutoff_search(links)  # detaches its own result
 
 
 def o8_hub_damped_counts(spark, sf_dir):
@@ -563,28 +539,27 @@ def so1_snapshot_diff(spark, sf_dir):
 
 
 def s5_dense_export(spark, sf_dir):
-    m, fm = _cached_fm(spark, sf_dir)
-    defs = fm.filter(F.col("kind") == "DEF")
-    # cache the probe-bounded related slice too: it feeds the url-universe
-    # union (2 scans) AND the final id-mapping join (guide §5)
-    rel = (
-        tm.related_pages(tm.edges(defs, fm.filter(F.col("kind") == "REF")), defs)
-        .filter((_doc_num(F.col("page")) < 5) & (_doc_num(F.col("other")) < 5))
-        .cache()
-    )
-    urls = (
-        rel.select(F.col("page").alias("url"))
-        .union(rel.select(F.col("other").alias("url")))
-        .distinct()
-    )
-    # two-phase global rank (graphops.dense_ids) — no single-partition sort
-    nodes = dense_ids(urls)
-    src = nodes.select(F.col("url").alias("page"), F.col("id").alias("src"))
-    dst = nodes.select(F.col("url").alias("other"), F.col("id").alias("dst"))
-    out = rel.join(src, "page").join(dst, "other").select(
-        "src", "dst", F.col("score").cast("long").alias("score")
-    )
-    return _finish(out, m, fm, rel)
+    with query_scope(spark) as q:
+        fm = _cached_fm(q, spark, sf_dir)
+        defs = fm.filter(F.col("kind") == "DEF")
+        # cache the probe-bounded related slice too: it feeds the url-universe
+        # union (2 scans) AND the final id-mapping join (guide §5)
+        rel = q.cache(
+            tm.related_pages(tm.edges(defs, fm.filter(F.col("kind") == "REF")), defs)
+            .filter((_doc_num(F.col("page")) < 5) & (_doc_num(F.col("other")) < 5))
+        )
+        urls = (
+            rel.select(F.col("page").alias("url"))
+            .union(rel.select(F.col("other").alias("url")))
+            .distinct()
+        )
+        # two-phase global rank (graphops.dense_ids) — no single-partition sort
+        nodes = dense_ids(urls)
+        src = nodes.select(F.col("url").alias("page"), F.col("id").alias("src"))
+        dst = nodes.select(F.col("url").alias("other"), F.col("id").alias("dst"))
+        return q.result(rel.join(src, "page").join(dst, "other").select(
+            "src", "dst", F.col("score").cast("long").alias("score")
+        ))
 
 
 def s6_source_matrix(spark, sf_dir):
@@ -600,55 +575,55 @@ def s6_source_matrix(spark, sf_dir):
     value-buckets rows), and subtract the src==dst diagonal exactly.
     Identical result — the oracle still computes the naive pair grain, so
     the value-hash proves the factorization."""
-    m, fm = _cached_fm(spark, sf_dir)
-    defs = fm.filter(F.col("kind") == "DEF")
-    refs = fm.filter(F.col("kind") == "REF")
-    pages = doc_pages(spark, sf_dir).select("url", "source")
-    # the three per-side aggregates each feed two consumers (side dim +
-    # diagonal correction) — cache the (small) aggregates, not the joins
-    refcnt = refs.groupBy("url", "name").agg(F.count("*").alias("w")).cache()
-    dd = defs.select("url", "name").distinct().cache()
-    defcnt = defs.groupBy("url").agg(F.count("*").alias("d")).cache()
-    a_side = (
-        refcnt.join(pages, "url")
-        .groupBy("name", F.col("source").alias("source_a"), "w")
-        .agg(F.count("*").alias("na"))
-    )
-    b_side = (
-        dd.join(defcnt, "url").join(pages, "url")
-        .groupBy("name", F.col("source").alias("source_b"), "d")
-        .agg(F.count("*").alias("nb"))
-    )
-    out_w = F.col("w")
-    in_w = F.greatest(F.floor(F.col("w") / F.col("d")), F.lit(1))
-    cells = a_side.join(b_side, "name").select(
-        "source_a", "source_b",
-        (F.col("na") * F.col("nb") * out_w).alias("out_s"),
-        (F.col("na") * F.col("nb") * in_w).alias("in_s"),
-    )
-    # outgoing edges score cell (source(src), source(dst)); incoming score
-    # the transposed cell (page = dst)
-    m_out = cells.groupBy("source_a", "source_b").agg(F.sum("out_s").alias("s"))
-    m_in = cells.groupBy(
-        F.col("source_b").alias("source_a"), F.col("source_a").alias("source_b")
-    ).agg(F.sum("in_s").alias("s"))
-    # exact diagonal correction: the edge table excludes src == dst, so
-    # subtract the pages that both ref and define the same name
-    self_rows = (
-        refcnt.join(dd, ["url", "name"])
-        .join(defcnt, "url").join(pages, "url")
-        .select(
-            F.col("source").alias("source_a"), F.col("source").alias("source_b"),
-            (-(out_w + in_w)).alias("s"),
+    with query_scope(spark) as q:
+        fm = _cached_fm(q, spark, sf_dir)
+        defs = fm.filter(F.col("kind") == "DEF")
+        refs = fm.filter(F.col("kind") == "REF")
+        pages = doc_pages(spark, sf_dir).select("url", "source")
+        # the three per-side aggregates each feed two consumers (side dim +
+        # diagonal correction) — cache the (small) aggregates, not the joins
+        refcnt = q.cache(refs.groupBy("url", "name").agg(F.count("*").alias("w")))
+        dd = q.cache(defs.select("url", "name").distinct())
+        defcnt = q.cache(defs.groupBy("url").agg(F.count("*").alias("d")))
+        a_side = (
+            refcnt.join(pages, "url")
+            .groupBy("name", F.col("source").alias("source_a"), "w")
+            .agg(F.count("*").alias("na"))
         )
-    )
-    out = (
-        m_out.unionByName(m_in).unionByName(self_rows)
-        .groupBy("source_a", "source_b")
-        .agg(F.sum("s").cast("long").alias("score"))
-        .filter(F.col("score") != 0)
-    )
-    return _finish(out, m, fm, refcnt, dd, defcnt)
+        b_side = (
+            dd.join(defcnt, "url").join(pages, "url")
+            .groupBy("name", F.col("source").alias("source_b"), "d")
+            .agg(F.count("*").alias("nb"))
+        )
+        out_w = F.col("w")
+        in_w = F.greatest(F.floor(F.col("w") / F.col("d")), F.lit(1))
+        cells = a_side.join(b_side, "name").select(
+            "source_a", "source_b",
+            (F.col("na") * F.col("nb") * out_w).alias("out_s"),
+            (F.col("na") * F.col("nb") * in_w).alias("in_s"),
+        )
+        # outgoing edges score cell (source(src), source(dst)); incoming score
+        # the transposed cell (page = dst)
+        m_out = cells.groupBy("source_a", "source_b").agg(F.sum("out_s").alias("s"))
+        m_in = cells.groupBy(
+            F.col("source_b").alias("source_a"), F.col("source_a").alias("source_b")
+        ).agg(F.sum("in_s").alias("s"))
+        # exact diagonal correction: the edge table excludes src == dst, so
+        # subtract the pages that both ref and define the same name
+        self_rows = (
+            refcnt.join(dd, ["url", "name"])
+            .join(defcnt, "url").join(pages, "url")
+            .select(
+                F.col("source").alias("source_a"), F.col("source").alias("source_b"),
+                (-(out_w + in_w)).alias("s"),
+            )
+        )
+        return q.result(
+            m_out.unionByName(m_in).unionByName(self_rows)
+            .groupBy("source_a", "source_b")
+            .agg(F.sum("s").cast("long").alias("score"))
+            .filter(F.col("score") != 0)
+        )
 
 
 # ------------------------------------------------- evidence-based scoring --
@@ -1170,46 +1145,6 @@ def ann_ivf_search(spark, sf_dir):
 
 # ---------------------------------------------------------------- rows-only
 # (no DuckDB oracle — the driver records the weaker rows-only check)
-def _detach(spark, df):
-    """Materialize a small result and release every intermediate cache —
-    the scored build caches its hot intermediates, and a sequence of
-    queries sharing one session would otherwise accumulate them until the
-    heap fills. Demo-sized outputs only (collects to the driver)."""
-    if _EXPLAIN_CAPTURE:
-        return df
-    rows = df.collect()
-    schema = df.schema
-    spark.catalog.clearCache()
-    return spark.createDataFrame(rows, schema)
-
-
-def _detach_cached(spark, df, cached):
-    """Scoped :func:`_detach`: materialize a small result, then unpersist
-    exactly the caches in ``cached`` (e.g. canonicalize_triples'
-    ``cached_out``) — other queries sharing the session keep theirs."""
-    if _EXPLAIN_CAPTURE:
-        return df
-    rows = df.collect()
-    schema = df.schema
-    for c in cached:
-        c.unpersist()
-    return spark.createDataFrame(rows, schema)
-
-
-def _detach_graph(spark, df, g):
-    """Scoped :func:`_detach`: materialize a small result, then release
-    exactly the caches (and the scratch stage) the given build created —
-    unlike ``clearCache()`` this leaves every OTHER query's warmed cache
-    in place when many contract queries share one session (bench/driver)."""
-    if _EXPLAIN_CAPTURE:
-        return df
-    rows = df.collect()
-    schema = df.schema
-    g.release_caches()
-    g.release()
-    return spark.createDataFrame(rows, schema)
-
-
 def mm_image_dims(spark, sf_dir):
     """Multimodal REAL decode path, oracle-verified: valid PNG (even
     doc_id) / GIF (odd) container headers are byte-assembled from doc_id,
@@ -2168,7 +2103,6 @@ def kg_delta_related(spark, sf_dir):
     over the POST-delta corpus — a hash mismatch anywhere in the splice
     (stats update, affected-page closure, edge prefilter) flips it."""
     from gossiphs_spark.operators.incremental import apply_delta, name_stats
-    from gossiphs_spark.session import fixture_partitions
 
     g = (F.col("id") / 10).cast("long")
     mk = lambda suf: F.concat(F.lit("ent"), g.cast("string"), F.lit(suf))  # noqa: E731
@@ -2184,14 +2118,14 @@ def kg_delta_related(spark, sf_dir):
     # production these come from the state store, not a recomputed plan;
     # uncached, apply_delta's ~10 references each re-derived the full
     # mention/related pipeline (1674-Exchange plan at r9 start)
-    with fixture_partitions(spark, 300):
-        m1 = tm.mentions(pages).cache()
-        fp = tm.filter_pointless(m1, 3).cache()
-        rel1 = tm.related_pages(
+    with query_scope(spark, fixture_rows=300) as q:
+        m1 = q.cache(tm.mentions(pages))
+        fp = q.cache(tm.filter_pointless(m1, 3))
+        rel1 = q.cache(tm.related_pages(
             tm.edges(fp.filter(F.col("kind") == "DEF"),
                      fp.filter(F.col("kind") == "REF")),
             fp.filter(F.col("kind") == "DEF"),
-        ).cache()
+        ))
         # delta: 5 pages of island 0 now also mention island 1's names
         changed = pages.filter(_doc_num(F.col("url")) < 5).select(
             "url",
@@ -2204,7 +2138,7 @@ def kg_delta_related(spark, sf_dir):
         _, _, related_new, affected, _ = apply_delta(
             m1, name_stats(m1), rel1, changed, return_touched=True
         )
-        return _finish(related_new, m1, fp, rel1)
+        return q.result(related_new)
 
 
 def kg_build_related(spark, sf_dir):
@@ -2214,12 +2148,11 @@ def kg_build_related(spark, sf_dir):
     from gossiphs_spark.config import PipelineConfig
     from gossiphs_spark.datagen import pages_df
     from gossiphs_spark.plans.pipeline import build_graph
-    from gossiphs_spark.session import fixture_partitions
 
-    with fixture_partitions(spark, 200):
+    with query_scope(spark, fixture_rows=200) as q:
         pages, evidence, _ = pages_df(spark, n_pages=200, seed=7)
-        g = build_graph(spark, pages, evidence, PipelineConfig())
-        return _detach_graph(spark, g.related, g)
+        g = q.own(build_graph(spark, pages, evidence, PipelineConfig()))
+        return q.result(g.related)
 
 
 def kg_build_scored(spark, sf_dir):
@@ -2254,7 +2187,6 @@ def _kg_build_scored_impl(spark, n_reg: int, n_solo: int):
     def_limit=3 binds both the knee head and the hard cap."""
     from gossiphs_spark.config import PipelineConfig
     from gossiphs_spark.plans.pipeline import build_graph
-    from gossiphs_spark.session import fixture_partitions
 
     n_all = n_reg + n_solo
     i = F.col("id")
@@ -2312,18 +2244,14 @@ def _kg_build_scored_impl(spark, n_reg: int, n_solo: int):
     )
     evidence = ev_of(i % 6).unionByName(ev_of((i % 6 + 1) % 6)).unionByName(fat)
 
-    with fixture_partitions(spark, n_all):
-        g = build_graph(
+    with query_scope(spark, fixture_rows=n_all) as q:
+        g = q.own(build_graph(
             spark, pages, evidence,
             PipelineConfig(max_def_ratio=0.15, def_limit=3),
-        )
-        return _detach_graph(
-            spark,
-            g.related.select(
-                "page", "other", F.col("score").cast("long").alias("score")
-            ),
-            g,
-        )
+        ))
+        return q.result(g.related.select(
+            "page", "other", F.col("score").cast("long").alias("score")
+        ))
 
 
 def kg_triples_canonical(spark, sf_dir):
@@ -2331,14 +2259,14 @@ def kg_triples_canonical(spark, sf_dir):
     from gossiphs_spark.datagen import pages_df
     from gossiphs_spark.operators.extract import extract_mentions
     from gossiphs_spark.plans.pipeline import canonicalize_triples
-    from gossiphs_spark.session import fixture_partitions
 
-    with fixture_partitions(spark, 120):
+    with query_scope(spark, fixture_rows=120) as q:
         pages, _, _ = pages_df(spark, n_pages=120, seed=7)
         m = extract_mentions(pages, columns=("url", "name", "kind", "start_byte"))
         # one kernel pass: the titles/objs branches below would each re-run
         # the extraction mapInPandas (same fix as lineage.materialize_triples)
-        m = m.localCheckpoint(eager=True)
+        m = q.cache(m)
+        m.count()
         titles = m.filter(F.col("kind") == "DEF").select(
             "url", F.col("name").alias("subj"))
         objs = (
@@ -2352,9 +2280,7 @@ def kg_triples_canonical(spark, sf_dir):
             objs.join(titles, "url").filter(F.col("obj") != F.col("subj"))
             .select("subj", "pred", "obj", "url", "start_byte")
         )
-        cached: list = []
-        return _detach_cached(
-            spark, canonicalize_triples(triples, cached_out=cached), cached)
+        return q.result(canonicalize_triples(triples, cached_out=q.hold([])))
 
 
 def kg_pagerank(spark, sf_dir):
@@ -2366,31 +2292,28 @@ def kg_pagerank(spark, sf_dir):
     value-verified (like u4_canonical_components)."""
     from gossiphs_spark.operators.graphops import pagerank
 
-    m, fm = _cached_fm(spark, sf_dir)
-    e = tm.edges(
-        fm.filter(F.col("kind") == "DEF"), fm.filter(F.col("kind") == "REF")
-    )
-    # deterministic subgraph bound (same pattern as a8/a9/w4 probes): the
-    # text-mode corpus is link-dense, so the full edge set is ~quadratic
-    # in pages; both endpoint predicates push below the linking join into
-    # the def/ref scans. 300 < the sf0.01 corpus, so the bound is
-    # exercised, not vacuous, in the oracle comparison.
-    e = e.filter(
-        (_doc_num(F.col("src_url")) < 300) & (_doc_num(F.col("dst_url")) < 300)
-    )
-    # cache the (bounded, ≤300² row) aggregated subgraph: pagerank reads
-    # its edge input four times (endpoints ×2, out-weights, share join)
-    agg = e.groupBy("src_url", "dst_url").agg(F.sum("weight").alias("w")).cache()
-    agg.count()  # fill at corpus parallelism (the linking join is big)…
-    from gossiphs_spark.session import fixture_partitions
-
-    # …then iterate at subgraph parallelism: the 3 rank iterations run
-    # ~10 shuffle stages over a ≤300-node graph (scale-adaptive clamp)
-    with fixture_partitions(spark, 300):
-        pr = pagerank(agg, src="src_url", dst="dst_url", weight="w",
-                      iters=3, damping=0.85)  # detaches internally
-    for c in (m, fm, agg):
-        c.unpersist()
+    with query_scope(spark) as q:
+        fm = _cached_fm(q, spark, sf_dir)
+        e = tm.edges(
+            fm.filter(F.col("kind") == "DEF"), fm.filter(F.col("kind") == "REF")
+        )
+        # deterministic subgraph bound (same pattern as a8/a9/w4 probes): the
+        # text-mode corpus is link-dense, so the full edge set is ~quadratic
+        # in pages; both endpoint predicates push below the linking join into
+        # the def/ref scans. 300 < the sf0.01 corpus, so the bound is
+        # exercised, not vacuous, in the oracle comparison.
+        e = e.filter(
+            (_doc_num(F.col("src_url")) < 300) & (_doc_num(F.col("dst_url")) < 300)
+        )
+        # cache the (bounded, ≤300² row) aggregated subgraph: pagerank reads
+        # its edge input four times (endpoints ×2, out-weights, share join)
+        agg = q.cache(e.groupBy("src_url", "dst_url").agg(F.sum("weight").alias("w")))
+        agg.count()  # fill at corpus parallelism (the linking join is big)…
+        # …then iterate at subgraph parallelism: the 3 rank iterations run
+        # ~10 shuffle stages over a ≤300-node graph (scale-adaptive clamp)
+        with query_scope(spark, fixture_rows=300):
+            pr = pagerank(agg, src="src_url", dst="dst_url", weight="w",
+                          iters=3, damping=0.85)  # detaches internally
     return pr.select(
         F.col("node").alias("page"), F.round("rank", 6).alias("pagerank")
     )
@@ -2452,20 +2375,13 @@ def u4_triples_canonical(spark, sf_dir):
         ).alias("content"),
         F.lit("s").alias("source"),
     )
-    from gossiphs_spark.session import fixture_partitions
-
-    with fixture_partitions(spark, 120):
+    with query_scope(spark, fixture_rows=120) as q:
         triples = tm.triples(tm.mentions(pages), 3)
-        cached: list = []
-        out = canonicalize_triples(triples, cached_out=cached)
-        return _detach_cached(
-            spark,
-            out.select(
-                "subj", "pred", "obj", "url",
-                F.col("start_byte").cast("long").alias("start_byte"),
-            ),
-            cached,
-        )
+        out = canonicalize_triples(triples, cached_out=q.hold([]))
+        return q.result(out.select(
+            "subj", "pred", "obj", "url",
+            F.col("start_byte").cast("long").alias("start_byte"),
+        ))
 
 
 def ann_lsh_buckets(spark, sf_dir):

@@ -11,8 +11,9 @@ from __future__ import annotations
 import os
 import tempfile
 import zipfile
+from contextlib import ExitStack, contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def _package_zip() -> str:
@@ -70,30 +71,68 @@ def tune_adaptive(spark: SparkSession, approx_input_bytes: int,
     return on
 
 
-from contextlib import contextmanager
+EXPLAIN_CAPTURE = False  # set by scripts/capture_plans.py: QueryScope.result
+#                          returns the computation plan, not its detached copy
+
+
+class QueryScope(ExitStack):
+    """Everything one query makes that outlives a single action: caches,
+    builds (``GraphTables``), ``cached_out`` lists, scratch dirs, worker
+    threads. All of it is released when the scope closes, in reverse
+    order, on success and on an exception alike (ExitStack semantics)."""
+
+    def cache(self, df: DataFrame) -> DataFrame:
+        df = df.cache()
+        self.callback(df.unpersist)
+        return df
+
+    def own(self, build):
+        """Release a build's caches and scratch stage on exit."""
+        self.callback(build.release)
+        self.callback(build.release_caches)
+        return build
+
+    def hold(self, cached: list) -> list:
+        """Unpersist every frame a callee appends to ``cached`` on exit."""
+        self.callback(lambda: [df.unpersist() for df in cached])
+        return cached
+
+    def result(self, df: DataFrame) -> DataFrame:
+        """Eagerly copy a small result, while the scope's caches are still
+        live, through the driver as Arrow batches into a lineage-free
+        frame. Unlike ``localCheckpoint`` this leaves no block behind
+        (``unpersist`` cannot free a checkpointed RDD, so a session running
+        many queries piled them up) and, unlike a Row collect, it builds
+        no per-row Python objects. Probe-bounded results only (≤ ~10^5
+        rows); corpus-scale outputs go through the TripleSink/scratch seam."""
+        if EXPLAIN_CAPTURE:
+            # fix the cache substitution now, so the captured plan shows
+            # the cached reads the query really runs, not a recompute
+            df._jdf.queryExecution().withCachedData()
+            return df
+        return df.sparkSession.createDataFrame(df.toArrow(), df.schema)
 
 
 @contextmanager
-def fixture_partitions(spark: SparkSession, n_rows: int,
-                       rows_per_part: int = 100):
-    """Clamp shuffle parallelism to a known-small input's size for the
-    duration of a fixture-scale job (guide §2: derive partitioning from
-    input size rather than a constant tuned to the session). A fixed
-    few-hundred-row synthetic corpus gains nothing from the session's
-    16-32 reducers per stage — each of its ~30 shuffle stages would just
-    launch mostly-empty tasks (measured ~2x on the composed fixture
-    queries at r9). Scale-safe by construction: the clamp never RAISES
-    the session value (min with the current setting), so corpus-scale
-    sessions keep their parallelism and only fixture-bounded work drops
-    to size-proportional task counts. Restores the prior setting on
-    exit; all of the job's actions must run inside the block."""
-    cur = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    n = max(2, min(cur, n_rows // rows_per_part))
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield n
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", str(cur))
+def query_scope(spark: SparkSession, fixture_rows: int | None = None):
+    """The one lifetime for a query's caches, builds and conf.
+
+    ``fixture_rows`` clamps shuffle parallelism to a known-small input for
+    the scope's duration (guide §2: derive partitioning from input size,
+    not a constant tuned to the session): one reducer per 100 rows, floor
+    2. A fixed few-hundred-row synthetic corpus gains nothing from the
+    session's 16-32 reducers per stage — each of its ~30 shuffle stages
+    would launch mostly-empty tasks (measured ~2x on the composed fixture
+    queries at r9). The clamp never raises the session value, so
+    corpus-scale sessions keep their parallelism; the prior value is
+    restored on exit, so every action of the job must run inside."""
+    with QueryScope() as scope:
+        if fixture_rows is not None:
+            key = "spark.sql.shuffle.partitions"
+            cur = spark.conf.get(key)
+            scope.callback(spark.conf.set, key, cur)
+            spark.conf.set(key, str(max(2, min(int(cur), fixture_rows // 100))))
+        yield scope
 
 
 def dir_size_bytes(path: str) -> int:

@@ -18,11 +18,11 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 def main() -> None:
     tag, suffix, names = sys.argv[1], sys.argv[2], sys.argv[3].split(",")
-    from gossiphs_spark.session import get_spark
+    from gossiphs_spark import session
     from gossiphs_spark.plans import queries as Q
 
-    spark = get_spark(app_name="capture_plans")
-    Q._EXPLAIN_CAPTURE = True  # show the computation plan, not the checkpoint
+    spark = session.get_spark(app_name="capture_plans")
+    session.EXPLAIN_CAPTURE = True  # show the computation plan, not its detached copy
     out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", tag)
     os.makedirs(out_dir, exist_ok=True)
     for name in names:

@@ -238,25 +238,50 @@ def test_outlink_same_host_cap_bounds_hub_fanout(spark):
     assert all(r["match_kind"] == "same_host" for r in got)
 
 
-def test_fixture_partitions_clamps_and_restores(spark):
-    """fixture_partitions derives parallelism from the fixture size,
-    never raises the session value, floors at 2, and restores on exit
-    (including via early return/exception)."""
-    from gossiphs_spark.session import fixture_partitions
+def test_query_scope_clamps_restores_and_releases(spark):
+    """query_scope(fixture_rows=n) derives parallelism from the fixture
+    size (one reducer per 100 rows), never raises the session value,
+    floors at 2, and on exit — including via an exception — restores the
+    setting and unpersists everything cached under it."""
+    from gossiphs_spark.session import query_scope
 
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    with fixture_partitions(spark, 500, rows_per_part=100) as n:
-        assert n == min(int(before), 5) if int(before) >= 2 else 2
-        assert spark.conf.get("spark.sql.shuffle.partitions") == str(n)
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
-    # tiny fixture floors at 2; huge fixture never exceeds the session
-    with fixture_partitions(spark, 10) as n:
-        assert n == 2
-    with fixture_partitions(spark, 10**9) as n:
-        assert n == int(before)
-    try:
-        with fixture_partitions(spark, 10):
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    with query_scope(spark, fixture_rows=500):
+        assert spark.conf.get(key) == str(max(2, min(int(before), 5)))
+    assert spark.conf.get(key) == before
+    with query_scope(spark, fixture_rows=10):
+        assert spark.conf.get(key) == "2"
+    with query_scope(spark, fixture_rows=10**9):
+        assert spark.conf.get(key) == before
+    with query_scope(spark):
+        assert spark.conf.get(key) == before
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    with pytest.raises(RuntimeError, match="boom"):
+        with query_scope(spark, fixture_rows=10) as q:
+            q.cache(spark.range(10)).count()
+            held = q.hold([spark.range(5).cache()])
+            held[0].count()
+            assert not cm.isEmpty()
             raise RuntimeError("boom")
-    except RuntimeError:
-        pass
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    assert spark.conf.get(key) == before
+    assert cm.isEmpty()
+
+
+def test_scoped_query_leaves_no_residue(spark, sf_dir):
+    """A scoped contract query releases its caches and its detached
+    result holds no block: the CacheManager ends empty and no persistent
+    RDD is added (an eager localCheckpoint result added one per query,
+    which unpersist() cannot free)."""
+    from gossiphs_spark.plans import queries as Q
+
+    def persistent_ids():  # by id: the context drops unreachable ones
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    spark.catalog.clearCache()
+    before = persistent_ids()
+    out = Q.a8_edges(spark, sf_dir)
+    assert out.count() > 0
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert persistent_ids() <= before

@@ -175,3 +175,33 @@ def test_deterministic_across_runs(spark):
     r1 = build_graph(spark, pages, evidence, cfg).related.collect()
     r2 = build_graph(spark, pages.repartition(7), evidence.repartition(3), cfg).related.collect()
     assert sorted(map(tuple, r1)) == sorted(map(tuple, r2))
+
+
+def test_failed_build_releases_what_it_made(spark, monkeypatch):
+    """An exception mid-build (here in candidate generation, after the
+    mention/fm/evidence caches, the scratch stage and the evidence-fill
+    thread exist) re-raises with all of them released."""
+    import glob
+    import tempfile
+    import threading
+
+    from gossiphs_spark.plans import pipeline
+
+    def boom(*_a, **_k):
+        raise RuntimeError("injected")
+
+    def persistent_ids():  # by id: the context drops unreachable ones
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    pages, evidence, _ = pages_df(spark, n_pages=40, seed=5)
+    stage_glob = f"{tempfile.gettempdir()}/gossiphs_stage_*"
+    spark.catalog.clearCache()
+    rdds, dirs = persistent_ids(), set(glob.glob(stage_glob))
+    threads = set(threading.enumerate())
+    monkeypatch.setattr(pipeline, "_candidates", boom)
+    with pytest.raises(RuntimeError, match="injected"):
+        build_graph(spark, pages, evidence, PipelineConfig())
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert persistent_ids() <= rdds
+    assert set(glob.glob(stage_glob)) <= dirs
+    assert set(threading.enumerate()) <= threads
