@@ -250,10 +250,6 @@ def main(argv=None):
         app_name=f"gossiphs_{args.cmd}",
         cores=args.cores,
         shuffle_partitions=cfg.shuffle_partitions,
-        extra_conf={
-            "spark.sql.execution.arrow.maxRecordsPerBatch":
-                str(cfg.arrow_max_records_per_batch),
-        },
     )
     tune_adaptive(spark, dir_size_bytes(args.pages))
     try:

@@ -38,12 +38,11 @@ class PipelineConfig:
     half_life_days: float = 365.0         # (graph.rs:971)
 
     # --- engine knobs (ours; no reference analog — Spark-scale tuning) ---
-    # materialize the filtered-mention stage to scratch parquet: cuts the
-    # analyzed-tree depth for the ~25 downstream ops (driver plan-build
-    # ~14 s → ~5 s at sf0.1) and is the pipeline's natural checkpoint
-    # boundary at scale (an Iceberg stage table on a cluster)
-    stage_materialize: bool = True
-    # where stage_materialize writes. Empty = a driver-local tempdir,
+    # build_graph materializes the filtered-mention stage to scratch
+    # parquet: it cuts the analyzed-tree depth for the ~25 downstream ops
+    # (driver plan-build ~14 s → ~5 s at sf0.1) and is the pipeline's
+    # natural checkpoint boundary at scale (an Iceberg stage table on a
+    # cluster). This is where it writes. Empty = a driver-local tempdir,
     # which is only correct when spark.master is local (on yarn/k8s the
     # executors would write parts to THEIR local disks and the driver's
     # read-back would be silently truncated) — on a non-local master with
@@ -60,7 +59,6 @@ class PipelineConfig:
     count_all_pages: bool = False
     shuffle_partitions: int = 32
     salt_buckets: int = 16         # two-phase salted agg for hot keys
-    arrow_max_records_per_batch: int = 2048  # large html blobs per Arrow batch
     broadcast_threshold_rows: int = 2_000_000  # broadcast the IDF/dictionary maps
 
     # --- dedup / canonicalization (north_star; no direct ref analog) ---

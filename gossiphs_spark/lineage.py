@@ -26,6 +26,9 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gossiphs_spark.operators.extract import extract_mentions, triples_of
+from gossiphs_spark.session import query_scope
+
 LINEAGE_FILE = "lineage.jsonl"
 
 
@@ -64,15 +67,6 @@ def _append_lineage(out_dir: str, rec: dict) -> None:
     os.replace(tmp, path)
 
 
-def resolve_meta(meta: dict) -> dict:
-    """Resolve callable meta values to plain values (r7 ADVICE): called
-    centrally by materialize_triples just before ``sink.commit``, so
-    EVERY TripleSink backend receives plain JSON-serializable values and
-    none has to re-implement the resolution contract. Kept public so a
-    custom driver composing its own meta can apply the same rule."""
-    return {k: (v() if callable(v) else v) for k, v in meta.items()}
-
-
 class TripleSink:
     """Writer seam (VERDICT r2 item 9): everything materialize_triples /
     read_triples need from the storage layer, so the production backend —
@@ -89,12 +83,8 @@ class TripleSink:
                meta: dict) -> int:
         """Atomically publish one bucket's rows + its lineage record;
         returns the committed row count. MUST be all-or-nothing: a killed
-        commit leaves nothing a reader could see.
-
-        ``meta`` arrives as plain values — materialize_triples resolves
-        any callables via :func:`resolve_meta` before calling commit
-        (r7 ADVICE: per-backend resolution was an avoidable trap), so a
-        backend only serializes what it is given."""
+        commit leaves nothing a reader could see. ``meta`` holds plain
+        JSON-serializable values."""
         raise NotImplementedError
 
     def read(self, spark: SparkSession) -> DataFrame:
@@ -129,10 +119,6 @@ class ParquetRenameSink(TripleSink):
 
             shutil.rmtree(bucket_path)
         os.replace(tmp_path, bucket_path)  # atomic commit of the data
-        # belt-and-braces for direct callers — materialize_triples has
-        # already resolved callables centrally (resolve_meta); this is
-        # idempotent on plain values
-        meta = resolve_meta(meta)
         _append_lineage(
             self.out_dir,
             {**meta, "stage": "triples", "bucket": bucket, "triple_count": n,
@@ -158,78 +144,35 @@ def materialize_triples(
     out_dir: str,
     run_id: str,
     n_buckets: int = 8,
-    build_triples=None,
     fail_after: int | None = None,
     sink: TripleSink | None = None,
-    profile_stats: bool = True,
 ) -> list[int]:
     """Extract + commit triples bucket-by-bucket with lineage; resume-safe.
 
-    ``build_triples(pages_subset) -> DataFrame`` defaults to the extraction
-    triples of plans/pipeline.py. ``fail_after`` kills the run after N
-    bucket commits (test hook for the kill/resume property). ``sink``
-    defaults to the sandbox ParquetRenameSink; pass an Iceberg-backed
-    TripleSink in production. Returns the buckets committed by THIS
-    invocation.
+    A bucket's triples are :func:`~gossiphs_spark.operators.extract.triples_of`
+    over its pages' mentions. ``fail_after`` kills the run after N bucket
+    commits (test hook for the kill/resume property). ``sink`` defaults to
+    the sandbox ParquetRenameSink; pass an Iceberg-backed TripleSink in
+    production. Returns the buckets committed by THIS invocation.
 
-    ``profile_stats`` records per-grammar-profile page counts in each
-    bucket's lineage record (the reference's per-language dispatch
-    visibility, graph.rs:117-146): an unknown format flooding through a
-    fallback grammar shows up as a ``sniff:*`` spike in the commit log
-    instead of silently skewing the triple counts. On the default build
-    path the kernel emits one (url, profile, kind='PROFILE') sentinel
-    row per page alongside the mentions (r7 verdict item 4) and the
-    counters of record are a groupBy over the checkpointed sentinel
-    rows — still a single kernel pass, and EXACTLY-once under task
-    retries/recomputes where an accumulator tally is at-least-once
-    (rows regenerate deterministically; only one task commit wins;
-    pinned by tests/test_lineage.py, including the retry-immunity
-    test). A CUSTOM build_triples falls back to the standalone counter
-    scan (256 bytes/page — cheap next to extraction, but one extra job
-    per bucket).
+    Each bucket's lineage record carries per-grammar-profile page counts
+    (the reference's per-language dispatch visibility, graph.rs:117-146):
+    an unknown format flooding through a fallback grammar shows up as a
+    ``sniff:*`` spike in the commit log instead of silently skewing the
+    triple counts. The kernel emits one (url, profile, kind='PROFILE')
+    sentinel row per page alongside the mentions, and the counters are a
+    groupBy over those rows: a single kernel pass, and EXACTLY-once
+    under task retries/recomputes where an accumulator tally is
+    at-least-once (rows regenerate deterministically; only one task
+    commit wins; pinned by tests/test_lineage.py).
+
+    The triples' subject and object branches and the profile count would
+    each re-run the kernel (the plan scans the mapInPandas output once
+    per branch), so each bucket's mention table is cached and filled by
+    ONE kernel pass; the three then read the cached partitions. The cache
+    lives in a query scope that releases it once the bucket commits, so a
+    run leaves no block behind.
     """
-    mention_box: list = [None]  # checkpointed mention table, per bucket
-    default_build = build_triples is None
-    if build_triples is None:
-        from gossiphs_spark.operators.extract import extract_mentions
-
-        def build_triples(p):
-            m = extract_mentions(
-                p, columns=("url", "name", "kind", "start_byte"),
-                emit_profile_rows=profile_stats,
-            )
-            # The titles/objs branches below would each re-run the
-            # extraction kernel (the physical plan scans the
-            # mapInPandas output once per join branch — no exchange to
-            # reuse). An eager localCheckpoint materializes the
-            # bucket's mention table in ONE kernel pass; both branches
-            # (and the profile-count groupBy) then read the
-            # checkpointed partitions. This halves the dominant cost
-            # of the job. The severed RDD lineage is fine HERE because
-            # recovery is the sink's bucket-level commit log
-            # (idempotent re-commit), not Spark recompute.
-            m = m.localCheckpoint(eager=True)
-            mention_box[0] = m
-            titles = m.filter(F.col("kind") == "DEF").select(
-                "url", F.col("name").alias("subj")
-            )
-            objs = (
-                m.filter(F.col("kind").isin("REF", "IMPORT"))
-                .groupBy(
-                    "url",
-                    F.col("name").alias("obj"),
-                    F.when(F.col("kind") == "REF", F.lit("mentions"))
-                    .otherwise(F.lit("links_to"))
-                    .alias("pred"),
-                )
-                .agg(F.min("start_byte").alias("start_byte"))
-            )
-            return (
-                objs.join(titles, "url")
-                .filter(F.col("obj") != F.col("subj"))
-                .select("subj", "pred", "obj", "url", "start_byte")
-            )
-
     if sink is None:
         sink = ParquetRenameSink(out_dir)
     done = sink.committed()
@@ -240,38 +183,29 @@ def materialize_triples(
         if b in done:
             continue
         subset = pages_b.filter(F.col("_bucket") == b).drop("_bucket")
-        tri = build_triples(subset)
         stats = subset.agg(
             F.min("url").alias("url_min"),
             F.max("url").alias("url_max"),
             F.max("warc_ts").alias("wm"),
         ).collect()[0]
-
-        meta = {
-            "run_id": run_id,
-            "url_min": stats["url_min"],
-            "url_max": stats["url_max"],
-            "warc_ts_watermark": stats["wm"],
-        }
-        if profile_stats:
-            if default_build:
-                # counters of record, from the checkpointed sentinel
-                # rows (exactly-once — see the docstring): a tiny
-                # groupBy over already-materialized partitions
-                meta["profile_counts"] = dict(sorted(
-                    (r["name"], r["cnt"]) for r in
-                    mention_box[0].filter(F.col("kind") == "PROFILE")
-                    .groupBy("name").agg(F.count("*").alias("cnt"))
-                    .collect()
-                ))
-            else:
-                from gossiphs_spark.operators.extract import profile_counts
-
-                meta["profile_counts"] = {
-                    r["profile"]: r["n_pages"]
-                    for r in profile_counts(subset).collect()
-                }
-        sink.commit(spark, b, tri, resolve_meta(meta))
+        with query_scope(spark) as q:
+            m = q.cache(extract_mentions(
+                subset, columns=("url", "name", "kind", "start_byte"),
+                emit_profile_rows=True,
+            ))
+            m.count()
+            profiles = dict(sorted(
+                (r["name"], r["cnt"]) for r in
+                m.filter(F.col("kind") == "PROFILE")
+                .groupBy("name").agg(F.count("*").alias("cnt")).collect()
+            ))
+            sink.commit(spark, b, triples_of(m), {
+                "run_id": run_id,
+                "url_min": stats["url_min"],
+                "url_max": stats["url_max"],
+                "warc_ts_watermark": stats["wm"],
+                "profile_counts": profiles,
+            })
         committed_now.append(b)
         if fail_after is not None and len(committed_now) >= fail_after:
             raise RuntimeError("simulated kill after %d buckets" % fail_after)

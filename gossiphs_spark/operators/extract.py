@@ -31,7 +31,6 @@ from collections.abc import Iterator
 
 import pandas as pd
 
-from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -761,12 +760,11 @@ def profile_counts(pages: DataFrame) -> DataFrame:
     the Arrow boundary (shipping whole multi-KB pages into Python just
     to sniff heads would be a second full-corpus transfer per run);
     counts combine map-side (one Counter per Arrow batch), so the
-    shuffle is #profiles × #partitions tiny rows — safe to run on every
-    materialization. The 100-TB form — the counter folded into the
-    extraction job itself, saving this second parquet read — is
-    ``extract_mentions(profile_acc=...)``, the default materialization
-    path (lineage.materialize_triples); this standalone job remains the
-    oracle twin and the custom-build fallback."""
+    shuffle is #profiles × #partitions tiny rows. The counters of record
+    need no second read: ``lineage.materialize_triples`` counts the
+    kernel's PROFILE sentinel rows (``extract_mentions(emit_profile_rows=
+    True)``) in the extraction job itself; this standalone job is their
+    oracle twin."""
     import collections
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -792,27 +790,9 @@ ALL_MENTION_COLS = (
 )
 
 
-class DictSumParam(AccumulatorParam):
-    """AccumulatorParam summing str→int dicts — the merge type for
-    per-partition grammar-profile tallies (extract_mentions
-    ``profile_acc``). Accumulator semantics are at-least-once under task
-    retries, fine for dispatch-visibility metadata and exact in
-    non-speculative local runs (pinned by
-    tests/test_lineage.py::test_profile_counts_single_scan_matches_standalone)."""
-
-    def zero(self, value: dict) -> dict:
-        return {}
-
-    def addInPlace(self, a: dict, b: dict) -> dict:
-        for k, v in b.items():
-            a[k] = a.get(k, 0) + v
-        return a
-
-
 def extract_mentions(
     pages: DataFrame,
     columns: tuple[str, ...] = ALL_MENTION_COLS,
-    profile_acc=None,
     emit_profile_rows: bool = False,
 ) -> DataFrame:
     """pages(url, html, ...) → mentions via Arrow-batched mapInPandas.
@@ -827,22 +807,12 @@ def extract_mentions(
     Output frames are built column-wise: per-row tuple assembly allocates
     9 boxed objects per mention and dominates the kernel at scale.
 
-    ``profile_acc`` (a ``DictSumParam`` accumulator) is the 100-TB form
-    of the dispatch-visibility counter (r6 verdict item 6): the kernel
-    tallies ``profile_name_of`` per page WHILE extracting — the name is
-    computed anyway to pick the grammar — and adds one small dict per
-    partition at iterator exhaustion. Zero extra jobs, zero extra corpus
-    bytes vs the standalone ``profile_counts`` second scan; the hot
-    no-accumulator path is unchanged. Accumulators are at-least-once
-    under task retries; for an exactly-once count set
-    ``emit_profile_rows`` instead.
-
     ``emit_profile_rows`` appends one sentinel row per page —
     (url, name=<profile>, kind='PROFILE', offsets=-1) — to the kernel
     output. Because these rows flow through the deterministic dataflow
     (a retried task regenerates identical rows; only one task commit
-    wins), counting them downstream is exactly-once where an
-    accumulator would double-count (r7 verdict item 4). Downstream
+    wins), counting them downstream is exactly-once, where an
+    accumulator tally would double-count a retried task. Downstream
     stages filter on kind ∈ {DEF, REF, IMPORT, ...}, so the sentinels
     drop out of every graph path untouched.
     """
@@ -853,25 +823,14 @@ def extract_mentions(
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import collections
-
-        counts: collections.Counter | None = (
-            collections.Counter() if profile_acc is not None else None
-        )
         for pdf in batches:
             rows: list[tuple] = []
             for url, html in zip(pdf["url"], pdf["html"]):
-                if counts is None and not emit_profile_rows:
-                    rows.extend(profile_of(url, html)(url, html))
-                else:
-                    name = profile_name_of(url, html)
-                    if counts is not None:
-                        counts[name] += 1
-                    if emit_profile_rows:
-                        rows.append(
-                            (url, name, "PROFILE", -1, -1, -1, -1, -1, -1))
-                    rows.extend(
-                        _PROFILE_FNS[name.split(":", 1)[-1]](url, html))
+                name = profile_name_of(url, html)
+                if emit_profile_rows:
+                    rows.append(
+                        (url, name, "PROFILE", -1, -1, -1, -1, -1, -1))
+                rows.extend(_PROFILE_FNS[name.split(":", 1)[-1]](url, html))
             if rows:
                 transposed = list(zip(*rows))  # C-level transpose
                 yield pd.DataFrame(
@@ -879,10 +838,36 @@ def extract_mentions(
                 )
             else:
                 yield pd.DataFrame({c: [] for c in columns})
-        if counts:
-            profile_acc.add(dict(counts))
 
     return pages.select("url", "html").mapInPandas(run, schema)
+
+
+def triples_of(mentions: DataFrame) -> DataFrame:
+    """mentions(url, name, kind, start_byte, ...) → the extraction triples
+    (subj, pred, obj, url, start_byte), the pipeline's output contract
+    (the reference emits its symbols from one function too,
+    extractor.rs:209-298).
+
+    A page's DEF names are its subjects. Each distinct REF name on the
+    page is a ``mentions`` object and each IMPORT target a ``links_to``
+    object, anchored at its first occurrence (min start_byte); an object
+    equal to its subject is dropped. Other kinds (NAMESPACE, PROFILE
+    sentinels) never reach the output. The table is read twice (subject
+    and object branches): a caller passing the kernel's output straight
+    in should cache it first, or the kernel runs once per branch."""
+    subj = mentions.filter(F.col("kind") == "DEF").select(
+        "url", F.col("name").alias("subj"))
+    objs = (
+        mentions.filter(F.col("kind").isin("REF", "IMPORT"))
+        .groupBy("url", F.col("name").alias("obj"),
+                 F.when(F.col("kind") == "REF", F.lit("mentions"))
+                 .otherwise(F.lit("links_to")).alias("pred"))
+        .agg(F.min("start_byte").alias("start_byte"))
+    )
+    return (
+        objs.join(subj, "url").filter(F.col("obj") != F.col("subj"))
+        .select("subj", "pred", "obj", "url", "start_byte")
+    )
 
 
 def extract_texts(pages: DataFrame) -> DataFrame:

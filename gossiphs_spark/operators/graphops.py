@@ -1,4 +1,4 @@
-"""Graph materialization & read API (SURVEY.md §2.1 S5/S6, §2.3 J6,
+"""Graph materialization & read API (SURVEY.md §2.1 S5, §2.3 J6,
 §2.4 A8, §2.6 SO1).
 
 node/edge table export with dense ids (ref src/api.rs:363-447), snapshot
@@ -29,20 +29,6 @@ def salted_sum(df: DataFrame, key_cols: list[str], value_col: str,
         .agg(F.sum(value_col).alias("_partial"))
     )
     return partial.groupBy(*key_cols).agg(F.sum("_partial").alias(out))
-
-
-# ---------------------------------------------------------------------------
-# A8: accumulate candidate scores into symbol→symbol edge weights
-# (ref symbol.rs:231-241, called graph.rs:783-784), salted because hub
-# entities concentrate on few dst keys.
-# ---------------------------------------------------------------------------
-def accumulate_edges(links: DataFrame, src_col: str = "src_id",
-                     dst_col: str = "dst_id", weight_col: str = "score",
-                     salt_from: str | None = None, buckets: int = 16) -> DataFrame:
-    salt_src = salt_from or src_col
-    return salted_sum(
-        links, [src_col, dst_col], weight_col, salt_src, buckets, out_col="weight"
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -112,16 +98,6 @@ def dense_export(related: DataFrame) -> tuple[DataFrame, DataFrame]:
         .select("src", "dst", "score")
     )
     return nodes, edges_out
-
-
-# ---------------------------------------------------------------------------
-# S6: relation matrix (ref main.rs:329-441) — long form; the CSV pivot is a
-# groupBy().pivot() away and only sensible at small scale.
-# ---------------------------------------------------------------------------
-def relation_matrix(related: DataFrame, pivot_values: list[str] | None = None) -> DataFrame:
-    if pivot_values is None:
-        return related.select("page", "other", "score")
-    return related.groupBy("page").pivot("other", pivot_values).sum("score")
 
 
 # ---------------------------------------------------------------------------

@@ -32,7 +32,8 @@ from pyspark.sql import functions as F
 
 from gossiphs_spark.config import PipelineConfig
 from gossiphs_spark.functions import base_name, score_bucket
-from gossiphs_spark.operators.extract import extract_mentions, page_symbol_limit
+from gossiphs_spark.operators.extract import (extract_mentions,
+                                              page_symbol_limit, triples_of)
 from gossiphs_spark.operators.ranking import attach_cutoffs, filter_related
 from gossiphs_spark.operators.scoring import entropy_zscore_adjust
 from gossiphs_spark.operators.graphops import salted_sum
@@ -53,7 +54,7 @@ class GraphTables:
     #                         a caller opts into damping (<1.0, the web-
     #                         scale recommendation) the divergence stays
     #                         inspectable per run without forcing a job.
-    scratch_dir: str | None = None  # stage_materialize scratch this build
+    scratch_dir: str | None = None  # local stage scratch this build
     #                         reads from; atexit reclaims it, but a
     #                         long-lived driver calling build_graph
     #                         repeatedly should release() each result once
@@ -282,7 +283,7 @@ def _build_graph(scope, spark, pages, evidence, cfg) -> GraphTables:
     bcast_ok = stats["n_names"] <= cfg.broadcast_threshold_rows
     # fm is referenced by ~25 downstream joins/unions — prune to the 4
     # columns the scoring tail needs, then MATERIALIZE the stage to scratch
-    # parquet (cfg.stage_materialize). Two reasons:
+    # parquet. Two reasons:
     #   * driver latency: every downstream DataFrame op re-analyzes its
     #     whole logical subtree; cutting the tree at fm took the sf0.1
     #     plan-build from ~14 s to ~5 s. (localCheckpoint also cuts the
@@ -295,18 +296,15 @@ def _build_graph(scope, spark, pages, evidence, cfg) -> GraphTables:
     #     is the same seam); the sandbox backend is a scratch dir.
     fm = filter_pointless_full(mentions, cfg.symbol_len_limit, bcast_ok)  # F6+F7
     fm = fm.select("url", "name", "kind", "start_byte")
-    scratch = None
-    master = spark.conf.get("spark.master", "")
-    if cfg.stage_materialize and cfg.stage_scratch_uri:
+    scratch = fm_path = None
+    if cfg.stage_scratch_uri:
         # shared scratch (s3://…, hdfs://…) — every executor and the
         # driver see the same filesystem; cleanup is owned by the scratch
         # location's lifecycle (TTL / snapshot expiry), not this process.
         import uuid
 
         fm_path = cfg.stage_scratch_uri.rstrip("/") + f"/fm_{uuid.uuid4().hex}"
-        fm.write.mode("overwrite").parquet(fm_path)
-        fm = scope.cache(spark.read.parquet(fm_path))
-    elif cfg.stage_materialize and master.startswith("local"):
+    elif spark.conf.get("spark.master", "").startswith("local"):
         import atexit
         import os
         import shutil
@@ -321,22 +319,22 @@ def _build_graph(scope, spark, pages, evidence, cfg) -> GraphTables:
         atexit.register(shutil.rmtree, scratch, ignore_errors=True)
         scope.callback(shutil.rmtree, scratch, ignore_errors=True)
         fm_path = os.path.join(scratch, "fm")
-        fm.write.mode("overwrite").parquet(fm_path)
-        fm = scope.cache(spark.read.parquet(fm_path))
     else:
-        if cfg.stage_materialize:
-            # non-local master with no shared scratch URI: a driver-local
-            # tempdir would be written by executors to THEIR disks and
-            # read back truncated — fall back to caching the stage.
-            import warnings
+        # non-local master with no shared scratch URI: a driver-local
+        # tempdir would be written by executors to THEIR disks and read
+        # back truncated — fall back to caching the stage.
+        import warnings
 
-            warnings.warn(
-                "stage_materialize skipped: spark.master is non-local and "
-                "cfg.stage_scratch_uri is unset; set a shared scratch URI "
-                "to materialize the stage on a cluster",
-                stacklevel=3,
-            )
-        fm = scope.cache(fm)
+        warnings.warn(
+            "stage not materialized: spark.master is non-local and "
+            "cfg.stage_scratch_uri is unset; set a shared scratch URI "
+            "to materialize the stage on a cluster",
+            stacklevel=3,
+        )
+    if fm_path is not None:
+        fm.write.mode("overwrite").parquet(fm_path)
+        fm = spark.read.parquet(fm_path)
+    fm = scope.cache(fm)
     defs = fm.filter(F.col("kind") == "DEF")
     refs = fm.filter(F.col("kind") == "REF")
     imports = fm.filter(F.col("kind") == "IMPORT")
@@ -543,35 +541,12 @@ def _build_graph(scope, spark, pages, evidence, cfg) -> GraphTables:
             cfg.file_min_links, cfg.file_max_links,
         ).select("page", "other", "score")
 
-    # ---- triples (north_star output contract) ----------------------------
-    titles = mentions.filter(F.col("kind") == "DEF").select(
-        "url", F.col("name").alias("subj")
-    )
-    ref_objs = (
-        mentions.filter(F.col("kind") == "REF")
-        .groupBy("url", F.col("name").alias("obj"))
-        .agg(F.min("start_byte").alias("start_byte"))
-        .withColumn("pred", F.lit("mentions"))
-    )
-    link_objs = (
-        mentions.filter(F.col("kind") == "IMPORT")
-        .groupBy("url", F.col("name").alias("obj"))
-        .agg(F.min("start_byte").alias("start_byte"))
-        .withColumn("pred", F.lit("links_to"))
-    )
-    triples = (
-        ref_objs.unionByName(link_objs)
-        .join(titles, "url")
-        .filter(F.col("obj") != F.col("subj"))
-        .select("subj", "pred", "obj", "url", "start_byte")
-    )
-
     return GraphTables(
         mentions=mentions,
         candidates=kept,
         edges=page_edges,
         related=related,
-        triples=triples,
+        triples=triples_of(mentions),  # north_star output contract
         damped=stoplist,
         scratch_dir=scratch,
         cached=(mentions, fm, ev, evd, cands, kept, sym_edges),

@@ -2257,30 +2257,17 @@ def _kg_build_scored_impl(spark, n_reg: int, n_solo: int):
 def kg_triples_canonical(spark, sf_dir):
     """Extraction triples + MinHash-LSH entity canonicalization (U4)."""
     from gossiphs_spark.datagen import pages_df
-    from gossiphs_spark.operators.extract import extract_mentions
+    from gossiphs_spark.operators.extract import extract_mentions, triples_of
     from gossiphs_spark.plans.pipeline import canonicalize_triples
 
     with query_scope(spark, fixture_rows=120) as q:
         pages, _, _ = pages_df(spark, n_pages=120, seed=7)
         m = extract_mentions(pages, columns=("url", "name", "kind", "start_byte"))
-        # one kernel pass: the titles/objs branches below would each re-run
-        # the extraction mapInPandas (same fix as lineage.materialize_triples)
+        # one kernel pass: triples_of's subject and object branches would
+        # each re-run the extraction mapInPandas
         m = q.cache(m)
         m.count()
-        titles = m.filter(F.col("kind") == "DEF").select(
-            "url", F.col("name").alias("subj"))
-        objs = (
-            m.filter(F.col("kind").isin("REF", "IMPORT"))
-            .groupBy("url", F.col("name").alias("obj"),
-                     F.when(F.col("kind") == "REF", F.lit("mentions"))
-                     .otherwise(F.lit("links_to")).alias("pred"))
-            .agg(F.min("start_byte").alias("start_byte"))
-        )
-        triples = (
-            objs.join(titles, "url").filter(F.col("obj") != F.col("subj"))
-            .select("subj", "pred", "obj", "url", "start_byte")
-        )
-        return q.result(canonicalize_triples(triples, cached_out=q.hold([])))
+        return q.result(canonicalize_triples(triples_of(m), cached_out=q.hold([])))
 
 
 def kg_pagerank(spark, sf_dir):

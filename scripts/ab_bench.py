@@ -44,12 +44,14 @@ RUNNER = r"""
 import json, os, sys, time
 sys.path.insert(0, {tree!r})
 os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
-from gossiphs_spark.session import get_spark
+from gossiphs_spark.session import dir_size_bytes, get_spark, tune_adaptive
 import importlib.util
 spec = importlib.util.spec_from_file_location(
     "__spark_entry__", {tree!r} + "/__spark_entry__.py")
 em = importlib.util.module_from_spec(spec); spec.loader.exec_module(em)
-spark = get_spark(cores={cpus}, shuffle_partitions={cpus})
+# the session bench.py builds: AQE and shuffle width set by input size
+spark = get_spark(cores={cpus}, shuffle_partitions=max({cpus}, 16))
+tune_adaptive(spark, dir_size_bytes({sf_dir!r}))
 qs = em.queries()
 out = {{}}
 for name in {probes!r}:

@@ -70,9 +70,8 @@ import json, os, sys, time
 sys.path.insert(0, {repo!r})
 os.environ["SPARK_GRAFT_CPUS"] = "1"
 os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "6g")
-from pyspark.sql import functions as F
 from gossiphs_spark.session import get_spark
-from gossiphs_spark.operators.extract import extract_mentions
+from gossiphs_spark.operators.extract import extract_mentions, triples_of
 
 shards = {shards!r}
 spark = get_spark(app_name="exec_{idx}", cores=1, shuffle_partitions=2,
@@ -83,14 +82,9 @@ spark = get_spark(app_name="exec_{idx}", cores=1, shuffle_partitions=2,
 
 def triples_count(path):
     p = spark.read.parquet(path)
-    m = extract_mentions(p, columns=("url", "name", "kind", "start_byte"))
-    titles = m.filter(F.col("kind") == "DEF").select("url", F.col("name").alias("subj"))
-    objs = (m.filter(F.col("kind").isin("REF", "IMPORT"))
-        .groupBy("url", F.col("name").alias("obj"),
-                 F.when(F.col("kind") == "REF", F.lit("mentions"))
-                  .otherwise(F.lit("links_to")).alias("pred"))
-        .agg(F.min("start_byte").alias("start_byte")))
-    return (objs.join(titles, "url").filter(F.col("obj") != F.col("subj")).count())
+    return triples_of(
+        extract_mentions(p, columns=("url", "name", "kind", "start_byte"))
+    ).count()
 
 for s in shards:          # warmup pass: JIT/codegen + page cache
     triples_count(s)

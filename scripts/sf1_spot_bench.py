@@ -69,26 +69,13 @@ def probe_build_related(spark, k):
 
 def probe_triples_canonical(spark, k):
     from gossiphs_spark.datagen import pages_df_dist
-    from gossiphs_spark.operators.extract import extract_mentions
+    from gossiphs_spark.operators.extract import extract_mentions, triples_of
     from gossiphs_spark.plans.pipeline import canonicalize_triples
 
     pages, _ = pages_df_dist(
         spark, n_pages=120 * k, seed=7, partitions=max(8, 4 * k))
     m = extract_mentions(pages, columns=("url", "name", "kind", "start_byte"))
-    titles = m.filter(F.col("kind") == "DEF").select(
-        "url", F.col("name").alias("subj"))
-    objs = (
-        m.filter(F.col("kind").isin("REF", "IMPORT"))
-        .groupBy("url", F.col("name").alias("obj"),
-                 F.when(F.col("kind") == "REF", F.lit("mentions"))
-                 .otherwise(F.lit("links_to")).alias("pred"))
-        .agg(F.min("start_byte").alias("start_byte"))
-    )
-    triples = (
-        objs.join(titles, "url").filter(F.col("obj") != F.col("subj"))
-        .select("subj", "pred", "obj", "url", "start_byte")
-    )
-    return canonicalize_triples(triples)
+    return canonicalize_triples(triples_of(m))
 
 
 def probe_delta_related(spark, k):

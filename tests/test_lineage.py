@@ -158,10 +158,10 @@ def test_lineage_records_profile_counts(spark, tmp_path):
 
 
 def test_profile_counts_single_scan_matches_standalone(spark, tmp_path):
-    """r6 verdict item 6: the default build path tallies grammar profiles
-    INSIDE the extraction kernel (Spark accumulator side output — no
-    second corpus scan); the commit-log counters must equal the
-    standalone profile_counts job exactly."""
+    """The materialization tallies grammar profiles INSIDE the extraction
+    job (the kernel's PROFILE sentinel rows — no second corpus scan); the
+    commit-log counters must equal the standalone profile_counts job
+    exactly."""
     import collections
     import json
 
@@ -183,35 +183,27 @@ def test_profile_counts_single_scan_matches_standalone(spark, tmp_path):
 
 
 def test_default_build_plan_runs_kernel_exactly_once(spark):
-    """Structural guard for the single-pass default build: after the
-    eager localCheckpoint, the triples plan must read the checkpointed
-    mention partitions (Scan ExistingRDD) in BOTH join branches and
-    contain NO extraction kernel (MapInPandas) — the kernel ran exactly
-    once, at checkpoint time. Complements the counter-equality test with
-    a plan-shape pin so removing the checkpoint is caught even if the
-    counters happen to agree."""
-    from gossiphs_spark.operators.extract import extract_mentions
+    """Structural guard for the single-pass build: over the bucket's
+    cached mention table, every leaf of the triples plan is an
+    InMemoryTableScan — BOTH join branches read the cache and neither
+    re-runs the extraction kernel (MapInPandas) — so the kernel ran
+    exactly once, when the cache filled. Complements the counter-equality
+    test with a plan-shape pin so dropping the cache is caught even if
+    the counters happen to agree."""
+    from gossiphs_spark.operators.extract import extract_mentions, triples_of
+    from gossiphs_spark.session import query_scope
     from pyspark.sql import functions as F
 
     pages, _, _ = pages_df(spark, n_pages=10, seed=9)
-    m = extract_mentions(
-        pages, columns=("url", "name", "kind", "start_byte")
-    ).localCheckpoint(eager=True)
-    titles = m.filter(F.col("kind") == "DEF").select(
-        "url", F.col("name").alias("subj"))
-    objs = (
-        m.filter(F.col("kind").isin("REF", "IMPORT"))
-        .groupBy("url", F.col("name").alias("obj"),
-                 F.when(F.col("kind") == "REF", F.lit("mentions"))
-                 .otherwise(F.lit("links_to")).alias("pred"))
-        .agg(F.min("start_byte").alias("start_byte"))
-    )
-    tri = (objs.join(titles, "url").filter(F.col("obj") != F.col("subj"))
-           .select("subj", "pred", "obj", "url", "start_byte"))
-    plan = tri._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" not in plan, "kernel re-executes in the triples DAG"
-    assert plan.count("Scan ExistingRDD") >= 2  # both branches read the ckpt
-    # and WITHOUT the checkpoint the kernel appears in both branches —
+    with query_scope(spark) as q:
+        m = q.cache(extract_mentions(
+            pages, columns=("url", "name", "kind", "start_byte")))
+        m.count()
+        leaves = triples_of(m)._jdf.queryExecution().sparkPlan().collectLeaves()
+        names = [leaves.apply(i).nodeName() for i in range(leaves.size())]
+    assert len(names) >= 2  # one per branch
+    assert set(names) == {"InMemoryTableScan"}, names
+    # and WITHOUT the cache the kernel appears in both branches —
     # the condition the guard exists for
     m2 = extract_mentions(pages, columns=("url", "name", "kind", "start_byte"))
     t2 = (m2.filter(F.col("kind") == "DEF")
@@ -221,17 +213,49 @@ def test_default_build_plan_runs_kernel_exactly_once(spark):
     assert plan2.count("MapInPandas") == 2
 
 
+def test_materialize_leaves_no_residue(spark, tmp_path):
+    """Each bucket's mention table is released once the bucket commits:
+    after a run the CacheManager is empty and no persistent RDD was added
+    (a localCheckpoint block would stay: unpersist() cannot free it)."""
+    def persistent_ids():  # by id: the context drops unreachable ones
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    pages, _, _ = pages_df(spark, n_pages=20, seed=5)
+    spark.catalog.clearCache()
+    before = persistent_ids()
+    done = lineage.materialize_triples(
+        spark, pages, str(tmp_path / "res"), "run-r", n_buckets=4)
+    assert len(done) == 4
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert persistent_ids() <= before
+
+
+def test_materialized_triples_equal_build_graph(spark, tmp_path):
+    """The two entry points to the triples contract agree: the scored
+    build's ``triples`` and the lineage-committed buckets hold the same
+    rows."""
+    from gossiphs_spark.plans.pipeline import build_graph
+
+    pages, evidence, _ = pages_df(spark, n_pages=60, seed=3)
+    g = build_graph(spark, pages, evidence)
+    try:
+        built = {tuple(r) for r in g.triples.collect()}
+    finally:
+        g.release_caches()
+        g.release()
+    out = str(tmp_path / "eq")
+    lineage.materialize_triples(spark, pages, out, "run-eq", n_buckets=2)
+    got = {tuple(r) for r in lineage.read_triples(spark, out).collect()}
+    assert built and got == built
+
+
 def test_profile_counts_immune_to_recompute(spark):
-    """r7 verdict item 4: the counters of record derive from the
-    kernel's deterministic PROFILE sentinel rows, so re-executing the
-    plan (Spark's model of a task retry / partition recompute) cannot
-    change them. The accumulator tally is the contrast: the same double
-    execution doubles it — at-least-once, which is why it is no longer
-    the recorded metric."""
+    """The counters of record derive from the kernel's deterministic
+    PROFILE sentinel rows, so re-executing the plan (Spark's model of a
+    task retry / partition recompute) cannot change them."""
     from pyspark.sql import functions as F
 
-    from gossiphs_spark.operators.extract import (DictSumParam,
-                                                  extract_mentions,
+    from gossiphs_spark.operators.extract import (extract_mentions,
                                                   profile_counts)
 
     pages, _, _ = pages_df(spark, n_pages=12, seed=3)
@@ -257,11 +281,3 @@ def test_profile_counts_immune_to_recompute(spark):
     # sentinels must not leak into the graph-facing kinds
     kinds = {r["kind"] for r in m.select("kind").distinct().collect()}
     assert "PROFILE" in kinds and kinds - {"PROFILE"}
-
-    # accumulator contrast: double execution double-counts
-    acc = spark.sparkContext.accumulator({}, DictSumParam())
-    m2 = extract_mentions(pages, columns=("url", "name", "kind"),
-                          profile_acc=acc)
-    m2.count()
-    m2.count()
-    assert {k: v // 2 for k, v in acc.value.items()} == want
