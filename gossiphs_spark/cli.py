@@ -241,17 +241,10 @@ def main(argv=None):
 
     args = p.parse_args(argv)
 
-    from gossiphs_spark.session import dir_size_bytes, get_spark, tune_adaptive
+    from gossiphs_spark.session import bench_session
 
-    # engine knobs flow from PipelineConfig into the session (the same
-    # values a spark-submit launch would pass as --conf)
-    cfg = _cfg_of(args)
-    spark = get_spark(
-        app_name=f"gossiphs_{args.cmd}",
-        cores=args.cores,
-        shuffle_partitions=cfg.shuffle_partitions,
-    )
-    tune_adaptive(spark, dir_size_bytes(args.pages))
+    spark = bench_session(args.pages, cores=args.cores,
+                          app_name=f"gossiphs_{args.cmd}")
     try:
         {
             "relate": cmd_relate,

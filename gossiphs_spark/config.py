@@ -8,7 +8,7 @@ commits -> crawl-evidence snapshots).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field, asdict
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
@@ -50,14 +50,6 @@ class PipelineConfig:
     # cluster set this to a shared scratch location (s3://…, hdfs://…);
     # its lifecycle (snapshot expiry / TTL) then owns cleanup.
     stage_scratch_uri: str = ""
-    # n_pages source: False (default) counts distinct urls over the
-    # extracted mentions — one stats pass, no second corpus scan — which
-    # undercounts vs the reference when pages yield zero mentions
-    # (non-UTF-8 blobs, empty bodies; common in real crawls) and thereby
-    # shrinks the IDF / hub-stoplist / evidence-size-limit denominators.
-    # True pays a second scan of `pages` for the reference's exact count.
-    count_all_pages: bool = False
-    shuffle_partitions: int = 32
     salt_buckets: int = 16         # two-phase salted agg for hot keys
     broadcast_threshold_rows: int = 2_000_000  # broadcast the IDF/dictionary maps
 
@@ -67,9 +59,6 @@ class PipelineConfig:
     minhash_bands: int = 4         # 4 bands x 4 rows
     shingle_size: int = 3
     simhash_bits: int = 64
-
-    def as_dict(self) -> dict:
-        return asdict(self)
 
 
 DEFAULT_CONFIG = PipelineConfig()

@@ -32,11 +32,6 @@ def base_name(name: Column) -> Column:
     return F.element_at(F.split(name, r"\."), -1)
 
 
-def norm_path(p: Column) -> Column:
-    """X2: backslash→slash + quote trim (ref graph.rs:52-53, extractor.rs:289)."""
-    return F.regexp_replace(F.translate(p, "\\", "/"), """^["'<]+|["'>]+$""", "")
-
-
 def qualified(parts: Column) -> Column:
     """X3: container path joined with '.' (ref extractor.rs:197-207)."""
     return F.concat_ws(".", parts)

@@ -39,8 +39,6 @@ MENTIONS_SCHEMA = (
     "start_row long, start_col long, end_row long, end_col long"
 )
 
-EXTRACTED_SCHEMA = "url string, warc_ts timestamp, text string"
-
 _BLOCK_RE = re.compile(
     r"<(nav|footer|script|style)\b[^>]*>.*?</\1>", re.DOTALL | re.IGNORECASE
 )
@@ -868,21 +866,6 @@ def triples_of(mentions: DataFrame) -> DataFrame:
         objs.join(subj, "url").filter(F.col("obj") != F.col("subj"))
         .select("subj", "pred", "obj", "url", "start_byte")
     )
-
-
-def extract_texts(pages: DataFrame) -> DataFrame:
-    """pages → extracted(url, warc_ts, text); the byte-identical text table."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "url": pdf["url"],
-                    "warc_ts": pdf["warc_ts"],
-                    "text": [extract_text(h) for h in pdf["html"]],
-                }
-            )
-
-    return pages.select("url", "warc_ts", "html").mapInPandas(run, EXTRACTED_SCHEMA)
 
 
 def page_symbol_limit(mentions: DataFrame, limit: int = 4096) -> DataFrame:

@@ -196,17 +196,6 @@ def ahash64(plane) -> tuple:
     return hi, lo
 
 
-def _paeth_predictor(a: int, b: int, c: int) -> int:
-    """PNG spec §9.4: the Paeth predictor over left/up/up-left bytes."""
-    p = a + b - c
-    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-    if pa <= pb and pa <= pc:
-        return a
-    if pb <= pc:
-        return b
-    return c
-
-
 def _unfilter_scalar_row(line, prev, bpp: int, ft: int):
     """One Average/Paeth row via a tuned pure-Python loop over plain
     lists (no per-element numpy scalar extraction, predictor inlined).

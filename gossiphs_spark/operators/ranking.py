@@ -177,27 +177,6 @@ def attach_cutoffs(df: DataFrame, group_cols: list[str], score_col: str,
     )
 
 
-def prune_candidates(scored: DataFrame, group_cols: list[str], score_col: str,
-                     id_col: str, def_limit: int = 12, top_n: int = 0) -> DataFrame:
-    """W1: per-group candidate pruning (ref graph.rs:743-795).
-
-    Keeps, in descending score-bucket order: everything in buckets >= the
-    knee/max-drop cutoff (the top bucket always qualifies, cutoff <= max),
-    capped at ``hard_cap = def_limit if top_n == 0 else min(top_n, def_limit)``.
-    ``score_col`` must already be the integer bucket (X8 truncation).
-    """
-    cutoffs = group_cutoffs(scored, group_cols, score_col, def_limit)
-    hard_cap = def_limit if top_n == 0 else min(top_n, def_limit)
-    w = Window.partitionBy(*group_cols).orderBy(F.desc(score_col), F.asc(id_col))
-    return (
-        scored.join(cutoffs.select(*group_cols, "cutoff"), group_cols)
-        .withColumn("rn", F.row_number().over(w))
-        .filter((F.col(score_col) >= F.col("cutoff")) | (F.col("rn") == 1))
-        .filter(F.col("rn") <= hard_cap)
-        .drop("rn", "cutoff")
-    )
-
-
 def filter_related(related: DataFrame, group_cols: list[str], score_col: str,
                    order_col: str, file_min_links: int = 0,
                    file_max_links: int = 0) -> DataFrame:

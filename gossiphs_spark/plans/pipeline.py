@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gossiphs_spark.config import PipelineConfig
-from gossiphs_spark.functions import base_name, score_bucket
+from gossiphs_spark.functions import base_name, score_bucket, temporal_decay
 from gossiphs_spark.operators.extract import (extract_mentions,
                                               page_symbol_limit, triples_of)
 from gossiphs_spark.operators.ranking import attach_cutoffs, filter_related
@@ -266,20 +266,14 @@ def _build_graph(scope, spark, pages, evidence, cfg) -> GraphTables:
     scope.callback(pool.shutdown)
     ev_fill = pool.submit(ev_base.count)
     # ONE stats pass over the cached mentions feeds every scalar the plan
-    # needs: n_pages (was a second full scan of `pages` — at 100 TB that is
-    # a second corpus read for one number; pages without mentions are
-    # vanishingly rare on the web and the ratio/IDF uses tolerate the
-    # substitution) and n_names, which gates the dictionary broadcasts.
+    # needs: n_pages and n_names, which gates the dictionary broadcasts.
     stats = mentions.agg(
         F.countDistinct("url").alias("n_pages"),
         F.countDistinct("name").alias("n_names"),
     ).collect()[0]
-    if cfg.count_all_pages:
-        # reference-exact page count (includes zero-mention pages) — one
-        # extra corpus scan, see PipelineConfig.count_all_pages
-        n_pages = pages.select(F.countDistinct("url")).collect()[0][0]
-    else:
-        n_pages = stats["n_pages"]
+    # pages with at least one mention: zero-mention pages (empty bodies,
+    # non-UTF-8 blobs) are not counted, which saves a second corpus scan
+    n_pages = stats["n_pages"]
     bcast_ok = stats["n_names"] <= cfg.broadcast_threshold_rows
     # fm is referenced by ~25 downstream joins/unions — prune to the 4
     # columns the scoring tail needs, then MATERIALIZE the stage to scratch
@@ -363,7 +357,7 @@ def _build_graph(scope, spark, pages, evidence, cfg) -> GraphTables:
         age_days = (
             F.lit(anchor).cast("timestamp").cast("double") - F.col("ts").cast("double")
         ) / 86400.0
-        decay_w = F.pow(F.lit(2.0), -age_days / F.lit(cfg.half_life_days))
+        decay_w = temporal_decay(age_days, cfg.half_life_days)
     else:
         decay_w = F.lit(1.0)
     evd = scope.cache(ev.select("url", "evidence_id", decay_w.alias("w")))

@@ -20,7 +20,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gossiphs_spark.config import DEFAULT_CONFIG
-from gossiphs_spark.functions import base_name, md5_long, temporal_decay
+from gossiphs_spark.functions import (base_name, ends_with_dot_name, ext_lower,
+                                      md5_long, symbol_id, temporal_decay)
 from gossiphs_spark.operators import textmode as tm
 from gossiphs_spark.operators import scoring as sc
 from gossiphs_spark.operators.ranking import group_cutoffs
@@ -737,12 +738,12 @@ def x_scalar_suite(spark, sf_dir):
     qual = F.concat_ws(".", F.lit("web"), F.col("source"), F.col("lang"))
     return d.select(
         F.col("doc_id").cast("long").alias("doc_id"),
-        F.lower(F.element_at(F.split(path, r"\."), -1)).alias("ext"),
+        ext_lower(path).alias("ext"),
         base_name(qual).alias("base"),
-        qual.endswith(F.concat(F.lit("."), F.col("lang"))).alias("is_suffix"),
-        F.concat_ws(":", url, F.col("source"), F.lit("DEF"), F.col("n_chars").cast("string")).alias("symbol_id"),
+        ends_with_dot_name(qual, F.col("lang")).alias("is_suffix"),
+        symbol_id(url, F.col("source"), F.lit("DEF"), F.col("n_chars")).alias("symbol_id"),
         md5_long(url).alias("url_hash"),
-        F.round(F.pow(F.lit(2.0), -F.col("n_chars") / F.lit(365.0)), 6).alias("decay"),
+        F.round(temporal_decay(F.col("n_chars"), 365.0), 6).alias("decay"),
     )
 
 

@@ -13,6 +13,8 @@ Usage: python scripts/ab_bench.py SHA_A SHA_B [n_alt=3] [sf_dir] [probes]
 item 5 re-probes just kg_build_scored,kg_delta_related on a quiesced
 box without paying for the full 8-probe suite each pair).
 Writes BENCH/ab_summary.json; paste the table into BENCH/NOTES_r{N}.md.
+Each run builds the graded session from its own tree, so both commits
+must have ``session.bench_session``.
 """
 
 from __future__ import annotations
@@ -43,15 +45,12 @@ PROBES = [
 RUNNER = r"""
 import json, os, sys, time
 sys.path.insert(0, {tree!r})
-os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
-from gossiphs_spark.session import dir_size_bytes, get_spark, tune_adaptive
+from gossiphs_spark.session import bench_session
 import importlib.util
 spec = importlib.util.spec_from_file_location(
     "__spark_entry__", {tree!r} + "/__spark_entry__.py")
 em = importlib.util.module_from_spec(spec); spec.loader.exec_module(em)
-# the session bench.py builds: AQE and shuffle width set by input size
-spark = get_spark(cores={cpus}, shuffle_partitions=max({cpus}, 16))
-tune_adaptive(spark, dir_size_bytes({sf_dir!r}))
+spark = bench_session({sf_dir!r}, cores={cpus})
 qs = em.queries()
 out = {{}}
 for name in {probes!r}:

@@ -21,7 +21,7 @@ def main() -> None:
     from gossiphs_spark import session
     from gossiphs_spark.plans import queries as Q
 
-    spark = session.get_spark(app_name="capture_plans")
+    spark = session.bench_session(SF_DIR, app_name="capture_plans")
     session.EXPLAIN_CAPTURE = True  # show the computation plan, not its detached copy
     out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", tag)
     os.makedirs(out_dir, exist_ok=True)

@@ -51,6 +51,9 @@ import pandas as pd  # noqa: E402
 
 from pyspark.sql import functions as F  # noqa: E402
 
+# the corpora are synthesized; the session is the one bench.py builds
+# for its sf dir
+SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 EMB_DIM = 64
 EMB_ROWS_1X = 2000
 EMB_LABELS_1X = 16
@@ -159,17 +162,15 @@ PROBES = {
 
 
 def main() -> None:
-    from gossiphs_spark.session import get_spark
+    from gossiphs_spark.session import bench_session
 
     tag = sys.argv[1] if len(sys.argv) > 1 else "r08"
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
     results: dict = {"tag": tag, "probes": {}}
     for name, (fn, ks) in PROBES.items():
         rec = {}
         for k in ks:
             # fresh session per measurement: no cross-probe cache reuse
-            spark = get_spark(app_name=f"sf1spot_{name}_{k}", cores=32,
-                              shuffle_partitions=32)
+            spark = bench_session(SF_DIR, app_name=f"sf1spot_{name}_{k}")
             t0 = time.perf_counter()
             n = fn(spark, k).count()
             dt = time.perf_counter() - t0

@@ -37,6 +37,9 @@ sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F  # noqa: E402
 
+# the corpora are synthesized; the session is the one bench.py builds
+# for its sf dir
+SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 N_BUCKETS = 48
 N_DELTA_BATCHES = 3
 
@@ -136,12 +139,10 @@ def run_size(spark, n, n_buckets=N_BUCKETS):
 
 
 def main() -> None:
-    from gossiphs_spark.session import get_spark
+    from gossiphs_spark.session import bench_session
 
     tag = sys.argv[1] if len(sys.argv) > 1 else "r08"
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
-    spark = get_spark(app_name="state_io_bench", cores=32,
-                      shuffle_partitions=32)
+    spark = bench_session(SF_DIR, app_name="state_io_bench")
     results = {"tag": tag, "delta_pages_per_batch": 2,
                "sizes": [run_size(spark, 1_000, N_BUCKETS),
                          run_size(spark, 10_000, N_BUCKETS),

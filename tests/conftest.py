@@ -13,24 +13,13 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 SF_DIR_ORACLE = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
 
 
-def _driver_mem() -> str:
-    """Half of physical memory, never above 16g. One heap serves driver
-    and executors in local mode and the full suite runs ~2500 stages
-    through it, but the Python workers and the OS need the other half: a
-    heap as large as RAM gets the JVM killed by the kernel mid-suite."""
-    try:
-        with open("/proc/meminfo") as f:
-            kb = next(int(line.split()[1]) for line in f
-                      if line.startswith("MemTotal:"))
-    except (OSError, StopIteration, ValueError):
-        return "16g"
-    return f"{min(16 * 1024, kb // 2048)}m"
+_SESSIONS: list = []
 
 
 @pytest.fixture(scope="session")
 def spark():
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", _driver_mem())
     s = get_spark(app_name="gossiphs_spark_tests", cores=8, shuffle_partitions=8)
+    _SESSIONS.append(s)
     yield s
 
 
@@ -40,14 +29,16 @@ def sf_dir():
 
 
 @pytest.fixture(scope="module", autouse=True)
-def _clear_cache_after_module(spark):
+def _clear_cache_after_module():
     """Every pipeline build caches intermediates (mentions/fm/kept/…); a
     full-suite session accumulates them across ~10 modules until the
     shared driver heap chokes (observed as a late py4j failure ~2500
     stages in). Module-scoped fixtures stay cached while their module
-    runs; everything unpersists at module end."""
+    runs; everything unpersists at module end. Modules that never ask
+    for ``spark`` do not start one."""
     yield
-    try:
-        spark.catalog.clearCache()
-    except Exception:
-        pass
+    for s in _SESSIONS:
+        try:
+            s.catalog.clearCache()
+        except Exception:
+            pass
